@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The nlist knob measured on the persisted IVF-PQ layout (round-18
   * judge's #4): q128/q180's x100 serve exponent read 0.43 at FIXED
   * nlist=16 because each probed list grows with N — at production scale
@@ -29,28 +27,8 @@ object AnnNlistSweep {
         "usage: runMain graft.AnnNlistSweep <warmupDir> <dir1> [dirs...]")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // round-20: AQE sizes CACHED-plan output by bytes, so every
-        // session-staged frame gets a data-derived partition count (tiny
-        // graph/pair frames collapse to ~1 partition instead of 2x cpus;
-        // corpus-scale frames keep their width) — scale-adaptive by
-        // construction, guide SS2.2/SS2.6
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def run(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = GraftSession()
+    def run(name: String, dir: String): Double = Bench.seconds(spark, name, dir)
 
     // JIT/codegen warmup on the sacrificial dir at the default geometry
     spark.conf.set("graft.ann.nlist", "16")

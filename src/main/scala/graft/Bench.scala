@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR.
@@ -69,6 +69,24 @@ object Bench {
       samples.get(idx).flatMap(_.minOption).map(name -> _)
     }.toVector
     (timings, errors.toMap)
+  }
+
+  /** Materializes every column of every row of `df` through the noop sink. */
+  def drain(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Wall seconds to build registered query `name` over `dir` and
+    * [[drain]] it — one sample of the single-query harnesses
+    * (BenchOne/ScalingBench/AnnNlistSweep).
+    */
+  def seconds(spark: SparkSession, name: String, dir: String): Double =
+    seconds(SparkEntry.queries(name)(spark, dir))
+
+  /** Wall seconds to build `df` and [[drain]] it. */
+  def seconds(df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    drain(df)
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** Ambient-load evidence recorded in the bench artifact (round-7 VERDICT
@@ -214,29 +232,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // round-20: AQE sizes CACHED-plan output by bytes, so every
-        // session-staged frame gets a data-derived partition count (tiny
-        // graph/pair frames collapse to ~1 partition instead of 2x cpus;
-        // corpus-scale frames keep their width) — scale-adaptive by
-        // construction, guide SS2.2/SS2.6
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Harness sessions fail LOUD on the q100 pairwork guard (round-11
-    // directive #6): in a batch-log context a warning line is a silent
-    // 900 s quadratic at 100 TB scale, and an errored query is a visible
-    // artifact entry. Ad-hoc sessions keep SimilarityOps' warn default;
-    // SPARK_GRAFT_PAIRWORK_GUARD overrides for a deliberate adversary
-    // measurement (the x10sat collapse leg).
-    spark.conf.set("graft.semdedup.pairworkGuard",
-      sys.env.getOrElse("SPARK_GRAFT_PAIRWORK_GUARD", "fail"))
+    val spark = GraftSession.harness()
 
     // Snapshot of staged state BEFORE this run touches anything: frames
     // already cached or timed now were paid by earlier session activity,
@@ -249,8 +245,8 @@ object Bench {
         .collect { case (d, n) if d == sfDir => n }.toSet ++
         Staging.stagedNames(spark).collect { case (d, n) if d == sfDir => n }
 
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    def once(fn: (SparkSession, String) => DataFrame): Unit =
+      drain(fn(spark, sfDir))
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
 
@@ -285,10 +281,8 @@ object Bench {
       scala.util.Try(Files.readString(Paths.get("/proc/loadavg")).trim
         .split("\\s+").take(3).toSeq.map(_.toDouble)).getOrElse(Seq.empty)
     def sentinel(): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0, 4000000L, 1, 32).selectExpr("sum(id) AS s", "count(1) AS c")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      seconds(spark.range(0, 4000000L, 1, 32)
+        .selectExpr("sum(id) AS s", "count(1) AS c"))
     }.min
     val (load0, sent0) = (loadavg(), sentinel())
 

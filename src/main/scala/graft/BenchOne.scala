@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Times one or more registered queries in isolation (min-of-N, noop sink) —
   * the per-query iteration loop Bench is too coarse for. Multiple names run
   * sequentially in ONE session, which reproduces Bench's shared-session
@@ -46,33 +44,9 @@ object BenchOne {
         else s"no such quer${if (bad.size > 1) "ies" else "y"}: ${bad.mkString(", ")}")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // round-20: AQE sizes CACHED-plan output by bytes, so every
-        // session-staged frame gets a data-derived partition count (tiny
-        // graph/pair frames collapse to ~1 partition instead of 2x cpus;
-        // corpus-scale frames keep their width) — scale-adaptive by
-        // construction, guide SS2.2/SS2.6
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // fail-loud pairwork guard, like Bench/ScalingBench (round-11
-    // directive #6) — BenchOne reproduces Bench's session conditions, so
-    // it must reproduce its guard mode too; same env override
-    spark.conf.set("graft.semdedup.pairworkGuard",
-      sys.env.getOrElse("SPARK_GRAFT_PAIRWORK_GUARD", "fail"))
+    val spark = GraftSession.harness()
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val samples = (1 to repeats).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val samples = (1 to repeats).map(_ => Bench.seconds(spark, name, sfDir))
       println(f"BENCHONE $name min=${samples.min}%.3f samples=${samples.map(s => f"$s%.3f").mkString(",")}")
       // -stages: time each composed sub-plan of a decomposable query
       // separately (currently q120) — variance attribution, not a bench
@@ -81,11 +55,7 @@ object BenchOne {
       if (stages && name == "q120_recipe_funnel") {
         graft.queries.DedupOps.recipeFunnelStages(spark, sfDir)
           .foreach { case (st, df) =>
-            val ss = (1 to repeats).map { _ =>
-              val t0 = System.nanoTime()
-              df.write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            }
+            val ss = (1 to repeats).map(_ => Bench.seconds(df))
             println(f"BENCHONE stage:$st min=${ss.min}%.3f " +
               f"samples=${ss.map(x => f"$x%.3f").mkString(",")}")
           }

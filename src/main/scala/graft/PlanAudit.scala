@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for representative queries and greps them
   * for the scale-critical properties: parquet filter pushdown + column
   * pruning, broadcast joins on dim sides, and whole-stage codegen coverage.
@@ -20,20 +18,7 @@ object PlanAudit {
       else if (args.length > 1) args.drop(1).toSeq
       else Seq("q01_pricing_summary", "q04_fact_join_agg", "q05_snowflake_enrich",
         "q25_cart_add_delta", "q35_ngram_jaccard", "q38_knn_bruteforce")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // round-20: AQE sizes CACHED-plan output by bytes, so every
-        // session-staged frame gets a data-derived partition count (tiny
-        // graph/pair frames collapse to ~1 partition instead of 2x cpus;
-        // corpus-scale frames keep their width) — scale-adaptive by
-        // construction, guide SS2.2/SS2.6
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val auditLines = Seq.newBuilder[String]
     for (q <- Registry.all if names.contains(q.name)) {
       println(s"\n========== ${q.name} ==========")

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for registered queries to files — the
   * plan evidence the optimization rounds commit under `plans/rNN/`.
   *
@@ -19,21 +17,7 @@ object PlanDump {
       case Seq("all") | Seq() => SparkEntry.queries.keys.toSeq.sorted
       case xs => xs
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // round-20: AQE sizes CACHED-plan output by bytes, so every
-        // session-staged frame gets a data-derived partition count (tiny
-        // graph/pair frames collapse to ~1 partition instead of 2x cpus;
-        // corpus-scale frames keep their width) — scale-adaptive by
-        // construction, guide SS2.2/SS2.6
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     Files.createDirectories(Paths.get(outDir))
     val qs = SparkEntry.queries
     names.foreach { n =>

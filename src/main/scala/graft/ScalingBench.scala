@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling measurement for the shingle/dedup family: times each named query
   * on a sequence of corpus directories (e.g. a 1x and a 10x synthetic
   * `documents` corpus from tools/gen_scale_corpus.py) inside ONE JIT-warm
@@ -139,33 +137,8 @@ object ScalingBench {
         unknown.mkString(", "))
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // round-20: AQE sizes CACHED-plan output by bytes, so every
-        // session-staged frame gets a data-derived partition count (tiny
-        // graph/pair frames collapse to ~1 partition instead of 2x cpus;
-        // corpus-scale frames keep their width) — scale-adaptive by
-        // construction, guide SS2.2/SS2.6
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // fail-loud pairwork guard in harness sessions (round-11 directive
-    // #6); override with SPARK_GRAFT_PAIRWORK_GUARD=warn to measure the
-    // x10sat collapse adversary deliberately (PERF.md's q100 leg)
-    spark.conf.set("graft.semdedup.pairworkGuard",
-      sys.env.getOrElse("SPARK_GRAFT_PAIRWORK_GUARD", "fail"))
-
-    def run(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = GraftSession.harness()
+    def run(name: String, dir: String): Double = Bench.seconds(spark, name, dir)
 
     // JIT/codegen warmup on the sacrificial first dir; its staged frames
     // are never reused because Staging keys on the dir string.

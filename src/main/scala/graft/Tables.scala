@@ -106,8 +106,8 @@ object Tables {
       java.time.ZoneOffset.UTC.normalized(),
       s"graft requires a UTC session (found spark.sql.session.timeZone=$tz): " +
         "event-time normalization and the DuckDB oracles are defined over " +
-        "UTC instants. Set .config(\"spark.sql.session.timeZone\", \"UTC\") " +
-        "on the SparkSession builder (the library mains already do).")
+        "UTC instants. Set spark.sql.session.timeZone=UTC on the session " +
+        "(graft.GraftSession does).")
   }
 
   /** Normalize a `ts` column to session-TZ `TimestampType` whatever the

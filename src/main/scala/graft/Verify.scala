@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,21 +11,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(n: String) = only.forall(_.contains(n))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // round-20: AQE sizes CACHED-plan output by bytes, so every
-        // session-staged frame gets a data-derived partition count (tiny
-        // graph/pair frames collapse to ~1 partition instead of 2x cpus;
-        // corpus-scale frames keep their width) — scale-adaptive by
-        // construction, guide SS2.2/SS2.6
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // The correctness gate replays DEFAULT geometry: the DuckDB oracles
     // encode the two-level SemDeDup assignment and the 16-list IVF
     // quantizer, so a stray harness env (SPARK_GRAFT_THREE_LEVEL_MIN_K /

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -160,11 +160,22 @@ object SimilarityOps {
     // this fix, which dropped nulls).
     val cents = vecs(s, dir)
       .filter(col("vec_id") < annNlist(s))
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) Seq.empty[Double] else r.getSeq[Double](1).toSeq))
+      .collect().map(r => r.getLong(0) -> annCentroidVec(r, 1))
       .toSeq.sortBy(_._1)
     (cents, cb, norms)
   }
+
+  /** A centroid row's vector for the driver-side model. A null embedding
+    * AND an embedding with a null ELEMENT both become the EMPTY vector:
+    * the batch window's cosine scores either null against every vector,
+    * and so does the empty vector, which stays in the tie-break set. A
+    * null element kept in a `Seq[Double]` would instead unbox to 0.0 in
+    * the kernel's model arrays and score a number the batch never sees
+    * (AnnEncodeKernelSpec's null-element centroid).
+    */
+  private[graft] def annCentroidVec(r: Row, i: Int): Seq[Double] =
+    if (r.isNullAt(i) || r.getSeq[Any](i).contains(null)) Seq.empty
+    else r.getSeq[Double](i).toSeq
 
   /** Two-level corpus-scaled centroid assignment shared by q131 and q133:
     * K = max(16, N/200) centroids, every vector routed through the 16
@@ -376,10 +387,10 @@ object SimilarityOps {
     * FAILS when `graft.semdedup.pairworkGuard=fail` — so a user reaching
     * for the textbook-fidelity member at 100 TB is stopped before the
     * cluster burns a day, not after. `off` skips the estimate entirely.
-    * The harness mains (Bench/BenchOne/ScalingBench) set `fail` on their
-    * sessions (round-11 directive #6): in a batch log a warning is
-    * invisible; an errored query is an artifact entry. Override there
-    * with SPARK_GRAFT_PAIRWORK_GUARD for deliberate adversary runs.
+    * Harness sessions (GraftSession.harness) set `fail`: in a batch log
+    * a warning is invisible; an errored query is an artifact entry.
+    * Override there with SPARK_GRAFT_PAIRWORK_GUARD for deliberate
+    * adversary runs.
     */
   private def guardPairwork(s: SparkSession, assigned: DataFrame): Unit = {
     val mode = s.conf.get("graft.semdedup.pairworkGuard", "warn")
@@ -494,7 +505,7 @@ object SimilarityOps {
     * cid) — shared by [[ivfpqTop5]] and the q180 index writer/server so
     * the two can never drift.
     */
-  private def coarseAssign(df: DataFrame, centroids: DataFrame,
+  private[graft] def coarseAssign(df: DataFrame, centroids: DataFrame,
       idCol: String, vCol: String, keep: Int,
       extra: Seq[String] = Nil): DataFrame = {
     import graft.functions.VectorFns.cosine
@@ -830,6 +841,11 @@ object SimilarityOps {
     // replacing the round-19 persist + separate aggregate pass. The
     // fail-loud READ-BACK verification below is unchanged — it still
     // compares the staged files against the assignment's stats.
+    // The observe sits ABOVE the repartition, in the write's result
+    // stage: a re-executed shuffle-map stage (fetch failure, lost
+    // executor) re-applies its accumulators and would double-count
+    // n/chk into a spurious "drifted index" refusal of a healthy
+    // build, while a result stage applies each partition's update once.
     val obs = org.apache.spark.sql.Observation()
     val want = try {
       // one file per list from birth (the compaction invariant, applied
@@ -838,8 +854,8 @@ object SimilarityOps {
       // scaled nlist is the q176 small-files trap on day zero (measured
       // in the round-19 nlist sweep: the fragmented nl=224 tree served
       // 3.4x slower than nl=16 purely on file opens)
-      lists.observe(obs, count(lit(1)).as("n"), annIndexChecksumCol.as("chk"))
-        .repartition(col("cid"))
+      lists.repartition(col("cid"))
+        .observe(obs, count(lit(1)).as("n"), annIndexChecksumCol.as("chk"))
         .write.partitionBy("cid").parquet(stagePath)
       val wm = obs.get
       val (wN, wChk) =

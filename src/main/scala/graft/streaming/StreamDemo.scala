@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end Structured Streaming drive of the minimum GMV slice (SURVEY.md
@@ -14,15 +13,8 @@ import org.apache.spark.sql.functions._
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     // File-source stream: the batch events table replayed as a stream, the
     // same way a Kafka topic would arrive (S1/S2 analog; SURVEY §1.5).

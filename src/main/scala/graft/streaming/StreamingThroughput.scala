@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -51,22 +51,8 @@ object StreamingThroughput {
     // without paying for the full sweep
     val only = args.lift(4).map(_.split(',').toSet)
     def sel(t: String): Boolean = only.forall(_.contains(t))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.harness()
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksProvider)
-    // harness sessions FAIL on hot-bucket pairwork blowup (a warning in a
-    // measurement log is invisible; an errored run is an artifact entry)
-    // — override with SPARK_GRAFT_PAIRWORK_GUARD=warn for a deliberate
-    // adversary measurement, same contract as Bench/BenchOne/ScalingBench
-    spark.conf.set("graft.mixture.pairworkGuard",
-      sys.env.getOrElse("SPARK_GRAFT_PAIRWORK_GUARD", "fail"))
     import spark.implicits._
 
     /** Feed `rows` in BatchRows-sized micro-batches to every query built

@@ -3,17 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (getOrCreate reuses one JVM-wide
-  * session; sbt forks a single JVM for tests).
+/** Shared local SparkSession for all suites: the one GraftSession the
+  * mains run (getOrCreate reuses one JVM-wide session; sbt forks a single
+  * JVM for tests), pinned to 4 cores so partition-sensitive assertions do
+  * not depend on the host.
   */
 trait SparkSpec extends AnyFunSuite {
-  protected lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  protected lazy val spark: SparkSession = GraftSession(4)
 
   /** Runs `body` with the given SQL confs set on the shared session,
     * restoring (or unsetting) each previous value afterwards — the ONE

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.queries.SimilarityOps
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,7 +26,7 @@ class AnnEncodeKernelSpec extends SparkSpec {
         df.withColumn("lab", col("label").cast("int")),
         "vec_id", m, keepCols = Seq("lab"))
       .select(col("vec_id").cast("long").as("neighbor_id") +:
-        (0 until graft.queries.SimilarityOps.PqM)
+        (0 until SimilarityOps.PqM)
           .map(i => col(s"code_$i")) :+
         col("lab") :+ col("cid"): _*)
 
@@ -80,19 +81,29 @@ class AnnEncodeKernelSpec extends SparkSpec {
       }.asJava, schema)
 
     // model with DUPLICATE centroids (cid 2 ≡ cid 5 — every vector ties
-    // exactly, the smaller cid must win in both paths), an empty-vector
-    // centroid (the null-embedding degrade annModel documents), and a
-    // wrong-dimension centroid
+    // exactly, the smaller cid must win in both paths), a null-embedding
+    // centroid, a wrong-dimension centroid, and a null-ELEMENT centroid
+    // at the minimum cid (every all-null-cosine arrival must route to
+    // it). The centroid rows go through annModel's row conversion, which
+    // maps both null shapes to the empty vector
     val c0 = (0 until dims).map(i => (i % 5 + 1).toDouble)
     val c1 = (0 until dims).map(i => (i % 3 + 2).toDouble)
+    def cvec(xs: Seq[Double]): Seq[java.lang.Double] = xs.map(Double.box)
+    val centDf = spark.createDataFrame(Seq(
+        Row(1L, cvec(c0).updated(10, null.asInstanceOf[java.lang.Double])),
+        Row(2L, cvec(c0)), Row(5L, cvec(c0)), Row(7L, cvec(c1)),
+        Row(9L, null), Row(11L, cvec(c1.take(16)))).asJava,
+      StructType(Seq(StructField("cid", LongType),
+        StructField("cv", ArrayType(DoubleType, containsNull = true)))))
     val model = StreamingAnn.Model(
-      centroids = Seq(2L -> c0, 5L -> c0, 7L -> c1,
-        9L -> Seq.empty[Double], 11L -> c1.take(16)),
+      centroids = centDf.collect().map(r =>
+        r.getLong(0) -> SimilarityOps.annCentroidVec(r, 1)).toSeq,
       cb = (0 until 8).map(mIdx => (0 until 16).map(k =>
         (0 until 8).map(j => ((mIdx + k + j) % 4).toDouble))).toIndexedSeq,
       norms = (0 until 8).map(mIdx => (0 until 16).map(k =>
         (0 until 8).map(j => ((mIdx + k + j) % 4).toDouble)
           .foldLeft(0.0)((a, x) => a + x * x))).toIndexedSeq)
+    assert(model.centroids.head == (1L -> Seq.empty[Double]))
 
     val a = rows(viaIngest(df, model))
     val b = rows(viaKernel(df, model))
@@ -105,6 +116,19 @@ class AnnEncodeKernelSpec extends SparkSpec {
     val cleanCid = viaKernel(df, model)
       .filter(col("neighbor_id") === 1L).select("cid").head().getLong(0)
     assert(Set(2L, 7L).contains(cleanCid))
+
+    // kernel ≡ the batch window over the raw centroid rows: the cid the
+    // index build would have assigned before the model was collected
+    def cids(df: DataFrame, idCol: String): Map[Long, Long] =
+      df.select(idCol, "cid").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val batch = SimilarityOps.coarseAssign(
+      df.select(col("vec_id"), StreamingAnn.toDouble(col("embedding")).as("nv")),
+      centDf, "vec_id", "nv", keep = 1)
+    val kernelCids = cids(viaKernel(df, model), "neighbor_id")
+    assert(kernelCids == cids(batch, "vec_id"))
+    // the null-element arrival scores null everywhere: minimum cid
+    assert(kernelCids(5L) == 1L)
 
     // empty model: null cid, null codes — both paths
     val empty = StreamingAnn.Model(Nil, model.cb, model.norms)
