@@ -1,7 +1,12 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
@@ -27,19 +32,72 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * Downstream code may assume `Tables(_, _, "events").schema("ts")` is
   * `TimestampType`; TablesSchemaSpec pins this across all three sf dirs so
   * the next silent regeneration fails in one named test.
+  *
+  * Resolution (file listing plus parquet schema inference, a Spark job) is
+  * paid once per (session, dir, table): the resolved relation is kept in a
+  * catalog keyed like `Staging`, stamped with the table path's
+  * `FileStatus` (modification time, length), and re-resolved when the
+  * stamp moves, so a rewritten table is never served stale. Each call
+  * wraps the relation in a fresh `LogicalRelation` (new attribute ids), so
+  * two reads of one table self-join like two independent reads. Only the
+  * read-only inputs under `sfDir` come through here; artifacts that
+  * queries write (ANN index trees, export shards, DWS tables) never do.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    frame(spark, resolved(spark, sfDir, name))
+
+  private def frame(spark: SparkSession, r: Resolved): DataFrame =
+    normalizeTs(spark.baseRelationToDataFrame(r.relation))
+
+  /** One catalog entry: the table's relation, valid while the path's
+    * status matches `status`, and the [[parallel]] probes made on it.
+    */
+  private[graft] final class Resolved(val status: FileStatus,
+      val relation: BaseRelation, fs: FileSystem) {
+    // The scan's partition count as planned under the first caller's split
+    // confs. A probe gone stale after a conf change can only cost time:
+    // the floor's repartition never changes which rows are read.
+    @volatile private var partitions = -1
+    private[Tables] def scanPartitions(df: DataFrame): Int = {
+      if (partitions < 0) partitions = df.rdd.getNumPartitions
+      partitions
+    }
+    private[Tables] lazy val bytes: Long = fs.getContentSummary(status.getPath).getLength
+  }
+
+  private val catalog = TrieMap.empty[(SparkSession, String, String), Resolved]
+
+  /** The catalog entry for `sfDir/name.parquet`: one `getFileStatus` on a
+    * hit; a miss or a moved stamp resolves the table anew. Racing misses
+    * may each resolve — both results are correct, the last one is kept.
+    */
+  private[graft] def resolved(spark: SparkSession, sfDir: String, name: String): Resolved = {
     // Set at SparkSession construction in the library mains; repeated here
     // (idempotent, runtime-settable) as a fallback for externally created
     // sessions (tests, user shells) — without it a NANOS-encoded events
     // read fails outright.
     ensureSessionConfs(spark)
-    normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+    val path = new Path(s"$sfDir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status = fs.getFileStatus(path)
+    val key = (spark, sfDir, name)
+    catalog.get(key).filter { r =>
+      r.status.getModificationTime == status.getModificationTime &&
+        r.status.getLen == status.getLen
+    }.getOrElse {
+      val relation = spark.read.parquet(path.toString).queryExecution.analyzed
+        .collectFirst { case l: LogicalRelation => l.relation }
+        .getOrElse(throw new IllegalStateException(
+          s"$path did not resolve to a file-source relation"))
+      val r = new Resolved(status, relation, fs)
+      catalog.put(key, r)
+      r
+    }
   }
 
   /** [[apply]] with a parallelism floor — the entry scan for an expensive
@@ -74,18 +132,16 @@ object Tables {
     * ungated [[parallel]] (= `minBytes = 0`, which also skips the
     * filesystem size probe). Same passthrough contract above the floor;
     * ONE implementation so the floor rule can never diverge between the
-    * gated and ungated forms.
+    * gated and ungated forms. Both probes (scan partitions, on-disk size)
+    * are memoized in the table's catalog entry.
     */
   def parallel(spark: SparkSession, sfDir: String, name: String,
       minBytes: Long): DataFrame = {
-    val df = apply(spark, sfDir, name)
+    val r = resolved(spark, sfDir, name)
+    val df = frame(spark, r)
     val floor = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= floor) df
-    else if (minBytes > 0L && {
-      val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.getContentSummary(path).getLength < minBytes
-    }) df
+    if (r.scanPartitions(df) >= floor) df
+    else if (minBytes > 0L && r.bytes < minBytes) df
     else df.repartition(floor)
   }
 
@@ -99,7 +155,7 @@ object Tables {
     * every non-graft date/timestamp expression in a user's session — an
     * error names the one-line fix instead.
     */
-  private[graft] def ensureSessionConfs(spark: SparkSession): Unit = {
+  private def ensureSessionConfs(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tz = spark.conf.get("spark.sql.session.timeZone")
     require(java.time.ZoneId.of(tz).normalized() ==

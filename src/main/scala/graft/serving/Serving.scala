@@ -1,8 +1,13 @@
 package graft.serving
 
+import java.time.LocalDate
+import java.time.format.DateTimeFormatter
+
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Serving-layer queries (SURVEY.md §2.13): the publisher's two HTTP
   * endpoints as date-parameterized library functions plus the exact JSON
@@ -55,12 +60,16 @@ object Serving {
   }
 
   /** Q2 response: `{"status":0,"data":{"mapData":[{"name":…,"value":…},…],
-    * "valueName":"order_amount"}}` (the publisher's map-chart shape).
+    * "valueName":"order_amount"}}` (the publisher's map-chart shape),
+    * sorted by name. At most one row per province, so the sort runs on
+    * the driver after the collect: a distributed orderBy would cost a
+    * range-partition sampling job and one more exchange. Nulls first, as
+    * orderBy would put them.
     */
   def provinceJson(spark: SparkSession, sfDir: String, date: String): String = {
     val rows = provinceAmounts(spark, sfDir, date)
-      .orderBy(col("province_name"))
       .collect()
+      .sortBy(r => Option(r.getString(0)))
       .map(r => s"""{"name":"${r.getString(0)}","value":${r.getDouble(1)}}""")
     s"""{"status":0,"data":{"mapData":[${rows.mkString(",")}],"valueName":"order_amount"}}"""
   }
@@ -70,8 +79,8 @@ object Serving {
   // it reads pre-aggregated ClickHouse dws_* tables
   // (PUB/mapper/TradeStatMapper.java:15-20 FROM dws_trade_province_order
   // _window). The Spark analog: materialize the q54 window output
-  // date-partitioned, and serve day queries from it with a partition-pruned
-  // one-directory scan. ServingSpec asserts partitionCount == 1.
+  // date-partitioned, and serve day queries from it with a one-directory
+  // scan. ServingSpec asserts partitionCount == 1.
 
   /** Writes the q54 DWS province-order-window output as a date-partitioned
     * parquet table (partition column `dt` = the window's day) — run by the
@@ -82,29 +91,56 @@ object Serving {
       .withColumn("dt", to_date(substring(col("stt"), 1, 10)))
       .write.mode("overwrite").partitionBy("dt").parquet(path)
 
+  /** The schema a read of [[writeDwsProvinceWindow]]'s table surfaces,
+    * pinned so the serving reads infer nothing (ServingSpec checks it
+    * against an inferring read of a written table).
+    */
+  val DwsSchema: StructType = StructType.fromDDL(
+    "stt STRING, edt STRING, province_id BIGINT, province_name STRING, " +
+      "order_amount DOUBLE, order_count BIGINT, dt DATE")
+
+  /** One day of the DWS table: only the `dt=<day>` directory is listed
+    * and read (schema pinned, `basePath` keeps `dt` a partition column),
+    * so a request costs one directory however many days the table holds.
+    * Nothing is cached: a day appended or rewritten is seen by the next
+    * request. A day with no partition is the empty table; a missing table
+    * fails.
+    */
+  private def dwsDayFrame(spark: SparkSession, dwsPath: String, date: String): DataFrame = {
+    val day = LocalDate.parse(date, DateTimeFormatter.BASIC_ISO_DATE)
+    val dir = new Path(dwsPath, s"dt=$day")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val df =
+      if (fs.exists(dir))
+        spark.read.schema(DwsSchema).option("basePath", dwsPath).parquet(dir.toString)
+      else {
+        require(fs.exists(new Path(dwsPath)), s"DWS table $dwsPath does not exist")
+        spark.createDataFrame(java.util.List.of[Row](), DwsSchema)
+      }
+    df.filter(dwsDay(date))
+  }
+
   /** `dt = day` against the DATE-typed partition column: lands in the
-    * scan's PartitionFilters, so only one directory is listed or read.
+    * scan's PartitionFilters.
     */
   private def dwsDay(date: String) =
     col("dt") === to_date(lit(date), "yyyyMMdd")
 
-  /** GET /gmv served from the DWS table: one pruned partition, then a sum
+  /** GET /gmv served from the DWS table: one day's partition, then a sum
     * of that day's pre-aggregated 10 s windows — the serving query touches
     * O(day's windows) rows however large the fact history grows.
     */
   def gmvFromDws(spark: SparkSession, dwsPath: String, date: String): DataFrame =
-    spark.read.parquet(dwsPath)
-      .filter(dwsDay(date))
+    dwsDayFrame(spark, dwsPath, date)
       .agg(coalesce(sum(col("order_amount")), lit(0.0))
         .cast("double").as("gmv"))
 
-  /** GET /province served from the DWS table: pruned day partition rolled
+  /** GET /province served from the DWS table: one day's partition rolled
     * up from 10 s windows to per-province day totals.
     */
   def provinceAmountsFromDws(
       spark: SparkSession, dwsPath: String, date: String): DataFrame =
-    spark.read.parquet(dwsPath)
-      .filter(dwsDay(date))
+    dwsDayFrame(spark, dwsPath, date)
       .groupBy(col("province_name"))
       .agg(sum(col("order_amount")).cast("double").as("order_amount"))
 }

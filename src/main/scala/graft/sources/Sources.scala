@@ -29,26 +29,21 @@ object Sources {
     // pathGlobFilter on the leaf name (the filter matches only leaf FILE
     // names, which is exactly the single-file layout — it would silently
     // match nothing for the directory layout, hence the branch).
-    val path = s"$dir/$table.parquet"
-    // same preconditions as the batch loader: nanosAsLong for the schema
-    // probe below (a NANOS-encoded table throws without it) and the UTC
-    // assertion normalizeTs depends on — an external session hits this
-    // path without ever calling Tables.apply
-    graft.Tables.ensureSessionConfs(spark)
-    val schema = spark.read.parquet(path).schema
-    val p = new org.apache.hadoop.fs.Path(path)
-    val isFile =
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isFile
+    // The schema and the file/directory status come from the batch
+    // catalog entry (graft.Tables): no schema-inference job per stream
+    // start, and the same session preconditions (nanosAsLong, the UTC
+    // assertion normalizeTs depends on) as the batch loader.
+    val resolved = graft.Tables.resolved(spark, dir, table)
     val reader = spark.readStream
-      .schema(schema)
+      .schema(resolved.relation.schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
     val raw =
-      if (isFile) reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
-      else reader.parquet(path)
+      if (resolved.status.isFile) reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
+      else reader.parquet(s"$dir/$table.parquet")
     // Same ts normalization as the batch loader (graft.Tables.normalizeTs):
-    // the streamed schema comes from a batch read of the same files, so it
-    // carries whatever encoding the driver's testdata generation used —
-    // downstream streaming code may assume session-TZ TimestampType.
+    // the streamed schema is the batch relation's, so it carries whatever
+    // encoding the driver's testdata generation used — downstream
+    // streaming code may assume session-TZ TimestampType.
     graft.Tables.normalizeTs(raw)
   }
 

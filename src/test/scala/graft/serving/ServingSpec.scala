@@ -43,10 +43,22 @@ class ServingSpec extends SparkSpec {
     }
   }
 
+  private def writeDws(sf: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory("dws_province").toString
+    Serving.writeDwsProvinceWindow(spark, sf, dir)
+    dir
+  }
+
+  /** The sf0.001 DWS table, shared by the DWS tests. */
+  private lazy val dwsDir = writeDws(sfDir)
+
+  private def dwsDays(dir: String): Seq[String] =
+    spark.read.parquet(dir).select(date_format(col("dt"), "yyyyMMdd")).distinct()
+      .collect().map(_.getString(0)).sorted.toSeq
+
   test("DWS-backed serving: date-partitioned q54 table, one-partition " +
     "pruned scans, results equal the windowed source rolled up by day") {
-    val dir = java.nio.file.Files.createTempDirectory("dws_province").toString
-    Serving.writeDwsProvinceWindow(spark, sfDir, dir)
+    val dir = dwsDir
 
     val dws = graft.pipelines.Pipelines.provinceOrderWindow(spark, sfDir)
       .withColumn("dt", substring(col("stt"), 1, 10)).collect()
@@ -87,6 +99,56 @@ class ServingSpec extends SparkSpec {
       // a day with no windows serves 0, not an error
       assert(Serving.gmvFromDws(spark, dir, "19000101").head().getDouble(0) == 0.0)
     }
+  }
+
+  test("DWS serving on a day with no partition: no province rows, gmv 0") {
+    assert(!dwsDays(dwsDir).contains("19000101"))
+    assert(Serving.provinceAmountsFromDws(spark, dwsDir, "19000101").collect().isEmpty)
+    assert(Serving.gmvFromDws(spark, dwsDir, "19000101").head().getDouble(0) == 0.0)
+  }
+
+  test("the pinned DWS schema is the schema a read of the written table infers") {
+    assert(spark.read.parquet(dwsDir).schema == Serving.DwsSchema,
+      s"writeDwsProvinceWindow now writes ${spark.read.parquet(dwsDir).schema.toDDL}; " +
+        "update Serving.DwsSchema")
+  }
+
+  test("a DWS table rewritten from another sfDir serves the new numbers") {
+    val dir = writeDws(sfDir)
+    val day = dwsDays(dir).head
+    // an independent read of the table as written: the expected answers
+    def expected(): (Double, Map[String, Double]) = {
+      val rows = spark.read.parquet(dir).filter(date_format(col("dt"), "yyyyMMdd") === day)
+        .groupBy("province_name").agg(sum("order_amount")).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      (rows.values.sum, rows)
+    }
+    def served(): (Double, Map[String, Double]) = {
+      val gmv = Serving.gmvFromDws(spark, dir, day).head().getDouble(0)
+      val prov = Serving.provinceAmountsFromDws(spark, dir, day).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      (gmv, prov)
+    }
+    def assertClose(got: (Double, Map[String, Double]), want: (Double, Map[String, Double])): Unit = {
+      assert(math.abs(got._1 - want._1) < 1e-6, s"gmv ${got._1} != ${want._1}")
+      assert(got._2.keySet == want._2.keySet)
+      got._2.foreach { case (p, v) => assert(math.abs(v - want._2(p)) < 1e-6, s"province $p") }
+    }
+    val before = expected()
+    assertClose(served(), before)
+    Serving.writeDwsProvinceWindow(spark, sfDir.replace("sf0.001", "sf0.01"), dir)
+    val after = expected()
+    assert(math.abs(after._1 - before._1) > 1e-6, "the rewrite must change the day's gmv")
+    assertClose(served(), after)
+  }
+
+  test("provinceJson lists provinces sorted by name") {
+    val date = someDate
+    val names = "\"name\":\"([^\"]*)\"".r.findAllMatchIn(Serving.provinceJson(spark, sfDir, date))
+      .map(_.group(1)).toSeq
+    assert(names.nonEmpty && names == names.sorted)
+    assert(names.sorted == Serving.provinceAmounts(spark, sfDir, date).collect()
+      .map(_.getString(0)).toSeq.sorted)
   }
 
   test("provinceAmounts(date) returns per-province rows and the mapData JSON shape") {
