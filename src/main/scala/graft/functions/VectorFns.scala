@@ -43,6 +43,15 @@ object VectorFns {
   /** Embedding dimensionality of the `embeddings` table. */
   val Dims = 64
 
+  /** The one well-formed vector rule of every model build and lattice
+    * assignment: non-null, exactly [[Dims]] long, and no null element
+    * (VecDot nulls on one — a codegen'd check, no lambda).
+    */
+  def wellFormed(v: Column): Column = {
+    val d = v.cast("array<double>")
+    size(d) === Dims && dot(d, d).isNotNull
+  }
+
   /** Deterministic ±1 component d of hyperplane p: the parity of the first
     * 8 md5 hex digits of "p:d" — the same hash32 contract as TextFns, so
     * DuckDB reproduces every component bit-for-bit:

@@ -29,11 +29,11 @@ import org.apache.spark.sql.expressions.Window
   * clustering REPLAYABLE, which is what a 100 TB curation run needs when
   * the cluster assignment must be reproduced months later.
   *
-  * Scale shape: the centroid model is K rows — broadcast to every
-  * executor both rounds; the corpus is scanned once per Lloyd round (the
-  * algorithm's intrinsic cost) with NO corpus shuffle in assignment
-  * (crossJoin against the broadcast model + a per-vector argmin window);
-  * the update shuffles exactly K partial sum-arrays per partition
+  * Scale shape: the centroid model is K rows — shipped to every
+  * executor inside the plan; the corpus is scanned once per Lloyd round
+  * (the algorithm's intrinsic cost) with NO corpus shuffle in assignment
+  * (an in-row [[graft.functions.LatticeNearest]] argmin); the update
+  * shuffles exactly K partial sum-arrays per partition
   * (VecSumAgg's map-side fold), not corpus×dims rows. The round-2
   * assignment is session-staged (`kmeans_assign`) and shared by
   * q141/q142 — the q36/q57 staging discipline.
@@ -66,44 +66,46 @@ object ClusterOps {
 
   /** (vec_id, qv long-lattice vector, qvd double view, qq self-dot):
     * the per-vector invariants both Lloyd rounds reuse. Well-formed
-    * vectors ONLY (exactly [[graft.functions.VectorFns.Dims]] components
-    * — null/empty/ragged rows are excluded): the q128 "train on
-    * well-formed vectors only" contract. Without the filter a malformed
-    * vector's null distance sorts FIRST under Spark's asc ordering and
-    * silently joins cluster 0, diluting its centroid denominator —
-    * exactly the corruption the dirty-index specs exist to forbid.
+    * vectors ONLY ([[graft.functions.VectorFns.wellFormed]]: exactly
+    * [[graft.functions.VectorFns.Dims]] components, no null element) —
+    * the q128 "train on well-formed vectors only" contract. A malformed
+    * vector has no lattice distance, and letting it in would hand it to
+    * some cluster and dilute that centroid's denominator — exactly the
+    * corruption the dirty-index specs exist to forbid.
     */
   private def lattice(s: SparkSession, dir: String): DataFrame =
     // parallelism-floored scan: every lattice consumer is a staged build
-    // or the Lloyd loop's persisted base — per-round cost is 2K codegen'd
+    // or the Lloyd loop's persisted base — per-round cost is 2K
     // dot products per vector, which must use all cores even when the
     // embeddings file is a single row group (Tables.parallel passthrough
     // on production layouts)
     SimilarityOps.vecsParallel(s, dir)
+      .filter(graft.functions.VectorFns.wellFormed(col("v")))
       .select(col("vec_id"), quant(col("v")).as("qv"))
-      .filter(size(col("qv")) === graft.functions.VectorFns.Dims)
-      .withColumn("qvd", transform(col("qv"), x => x.cast("double")))
+      .withColumn("qvd", col("qv").cast("array<double>"))
       .withColumn("qq", dot(col("qvd"), col("qvd")))
 
-  // Round-19 optimization note: the original crossJoin(broadcast model) +
-  // per-vector rn=1 window assignment is gone — it EXPLODED the corpus
-  // ×K and shuffled that by vec_id for the window. Every assignment in
-  // this file now routes through [[nearestStruct]] (the in-row argmin,
-  // THE single home of the lattice arithmetic, zero shuffle) against a
-  // collected ≤K-row driver model — identical distances and tie rule,
-  // which the StreamingCluster handoff and ClusterOpsLoopSpec pin.
+  /** The lattice's (qv, qvd, qq) as a plain RDD: the input of
+    * [[LloydKernel.roundStats]].
+    */
+  private def latticeRdd(s: SparkSession, dir: String)
+      : org.apache.spark.rdd.RDD[(Array[Long], Array[Double], Double)] =
+    lattice(s, dir).select(col("qv")).rdd.map { r =>
+      val qv = r.getSeq[Long](0).toArray
+      val qvd = qv.map(_.toDouble)
+      (qv, qvd, graft.functions.VectorModels.dot(qvd, 0, qvd, 0, qvd.length))
+    }
 
   // ------------------------------------------------------------------
   // Iterate-to-convergence Lloyd (q145, round-10 VERDICT directive #2).
   //
   // The two-round q141 stays as the family's pinned refinement; q145
   // generalizes it with a movement-based stop. Loop shape, chosen for
-  // 100 TB: the model is ALWAYS a driver-side K-row literal, so each
-  // round is ONE corpus-scan job — an in-row argmin (array_sort over
-  // literal (dist, cid) structs, the StreamingCluster mechanism, same
-  // exact integer distances and tie rules as the window form) feeding a
-  // K-group aggregate that returns counts, exact inertia, movement vs
-  // the previous model, and VecSumAgg lattice sums in one pass. No
+  // 100 TB: the model is ALWAYS an in-memory K-row model, so each
+  // round is ONE corpus-scan job — an in-row argmin (the StreamingCluster
+  // mechanism, same exact integer distances and tie rules as the window
+  // form) feeding a K-group aggregate that returns counts, exact
+  // inertia, movement vs the previous model, and VecSumAgg lattice sums in one pass. No
   // round-over-round lineage growth (nothing iterates inside the plan),
   // so no checkpoint dance; per-round cluster cost is a corpus scan +
   // 2K codegen'd dot products per vector for the assignment PLUS the
@@ -141,27 +143,19 @@ object ClusterOps {
     */
   private[graft] val MaxRounds = 32
 
-  /** In-row nearest-centroid (d, cid) struct against a LITERAL model —
-    * identical integer distances and (dist asc, cid asc) tie rule to
-    * [[assign]]'s window form, with zero shuffle: ascending struct sort
-    * IS the tie rule. THE single home of the lattice argmin arithmetic:
-    * the batch convergence loop ([[argminStruct]]) and the streaming
-    * in-row assignment ([[graft.streaming.StreamingCluster.assignCol]])
-    * both call it, so the streamed ≡ batch ≡ loop equivalence proofs can
-    * never diverge via a one-sided edit (review-pass finding: the round's
-    * first cut re-implemented this in a third place).
+  /** In-row nearest-centroid (d, cid) struct
+    * ([[graft.functions.LatticeNearest]]) — identical integer distances
+    * and (dist asc, cid asc) tie rule to the oracle's window form, with
+    * zero shuffle. The batch rounds ([[roundStats]], [[refined]]) and the
+    * streaming in-row assignment
+    * ([[graft.streaming.StreamingCluster.assignCol]]) all call it.
     */
   private[graft] def nearestStruct(qvd: Column, qq: Column,
       m: Seq[(Long, Seq[Long])]): Column = {
     require(m.nonEmpty, "ClusterOps: empty centroid model")
-    val arr = array(m.map { case (cid, cv) =>
-      val cvd = cv.map(_.toDouble)
-      val cc = cvd.map(x => x * x).sum // integer-valued doubles: exact
-      val dist = (qq - lit(2.0) * dot(qvd, typedLit(cvd))
-        + lit(cc)).cast("long")
-      struct(dist.as("d"), lit(cid).as("cid"))
-    }: _*)
-    element_at(array_sort(arr), 1)
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    column(graft.functions.LatticeNearest(expression(qvd), expression(qq),
+      graft.functions.LatticeModel(m)))
   }
 
   /** [[nearestStruct]] over the lattice frame's (qvd, qq) columns. */
@@ -283,31 +277,9 @@ object ClusterOps {
     val moved2 = rows2.map(_._4).sum
     if (moved2 == 0L)
       return (rows2.map(t => (t._1, t._2, t._3)), 2, m1)
-    // Rounds 3+ iterate on a PLAIN RDD, not a DataFrame (round-19
-    // optimization, guide §1.2 "per-task work only after the algorithm is
-    // right" inverted: here the ALGORITHM was already right and the cost
-    // was pure per-round Catalyst fixed overhead — each roundStats round
-    // re-planned and re-codegen'd a 16-literal-struct argmin aggregate,
-    // measured ~0.55 s/round × ~18 rounds = ~10 s of the kmeans_converged
-    // staging line at sf0.1 while the actual arithmetic on the persisted
-    // lattice is microseconds). The RDD round is the SAME exact integer
-    // lattice arithmetic ([[roundStatsLocal]] mirrors [[nearestStruct]]:
-    // dist = qq − 2q·c + c·c over integer-valued doubles, truncating
-    // cast, tie to smallest cid; sums are exact Longs), so stats, R, and
-    // the model stay bit-identical — ClusterOpsLoopSpec pins RDD-vs-
-    // DataFrame round parity including distance ties.
-    val baseRdd = lattice(s, dir)
-      .select(col("qv"))
-      .rdd.map { row =>
-        val qv = row.getSeq[Long](0).toArray
-        val qvd = new Array[Double](qv.length)
-        var qq = 0.0
-        var i = 0
-        while (i < qv.length) {
-          qvd(i) = qv(i).toDouble; qq += qvd(i) * qvd(i); i += 1
-        }
-        (qv, qvd, qq)
-      }
+    // rounds 3+ run on the persisted lattice RDD: one job per round and
+    // no per-round planning ([[LloydKernel.roundStats]])
+    val baseRdd = latticeRdd(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       var prev = m1
@@ -317,7 +289,7 @@ object ClusterOps {
       while (result.isEmpty) {
         r += 1
         if (r > maxRounds) notConverged(maxRounds, dir)
-        val rows = roundStatsLocal(baseRdd, m, Some(prev))
+        val rows = LloydKernel.roundStats(baseRdd, m, Some(prev))
         val moved = rows.map(_._4).sum
         if (moved == 0L)
           result = Some((rows.map(t => (t._1, t._2, t._3)), r, m))
@@ -326,16 +298,6 @@ object ClusterOps {
       result.get
     } finally baseRdd.unpersist()
   }
-
-  /** [[roundStats]] on the persisted lattice RDD — the arithmetic lives
-    * in the standalone serializable [[LloydKernel]] so task closures
-    * never capture this (non-serializable) object.
-    */
-  private[graft] def roundStatsLocal(
-      base: org.apache.spark.rdd.RDD[(Array[Long], Array[Double], Double)],
-      m: Seq[(Long, Seq[Long])], prev: Option[Seq[(Long, Seq[Long])]])
-      : Seq[(Long, Long, Long, Long, Seq[Long])] =
-    LloydKernel.roundStats(base, m, prev)
 
   /** The converged model — what a production deployment freezes and
     * ships to ingest ([[graft.streaming.StreamingCluster]]).
@@ -368,7 +330,8 @@ object ClusterOps {
                       list_transform(v, x ->
                         CAST(FLOOR(x * 1024 + 0.5) AS BIGINT) + 1024) AS qv
                FROM e
-               WHERE len(v) = ${graft.functions.VectorFns.Dims}),
+               WHERE len(v) = ${graft.functions.VectorFns.Dims}
+                 AND len(list_filter(v, x -> x IS NULL)) = 0),
         c1 AS (SELECT vec_id AS cid, qv AS cv FROM qn WHERE vec_id < $K)"""
     for (r <- 1 to n) {
       sb ++= s""",
@@ -432,36 +395,14 @@ object ClusterOps {
       .select(col("cid"), expr("transform(sv, x -> x div n)").as("cv"))
   }
 
-  /** The lattice as a plain RDD (vec_id, qv, qvd, qq) — the
-    * [[LloydKernel]] input for the round-1/2 refinement (round-19:
-    * kernel-routed like the convergence loop's rounds 3+; the Catalyst
-    * alternatives both lose — the crossJoin+window form explodes the
-    * corpus ×K through two shuffles, and an in-row literal-model
-    * argmin was MEASURED slower still (8.8 s vs 3.8 s staging at
-    * sf0.1: two 16-struct × 64-literal-dot expression trees in one
-    * projection swamp codegen).
-    */
-  private def latticeRdd(s: SparkSession, dir: String)
-      : org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Double], Double)] =
-    lattice(s, dir).select(col("vec_id"), col("qv")).rdd.map { r =>
-      val id = r.getLong(0)
-      val qv = r.getSeq[Long](1).toArray
-      val qvd = new Array[Double](qv.length)
-      var qq = 0.0
-      var i = 0
-      while (i < qv.length) { qvd(i) = qv(i).toDouble; qq += qvd(i) * qvd(i); i += 1 }
-      (id, qv, qvd, qq)
-    }
-
   /** Refined (post-update) centroid model as driver-side rows — bounded
     * (≤K) by construction and memoized per (session, dir) like
     * SimilarityOps' model builds: the offline-trained model a streaming
     * ingest path ships inside its plan
     * ([[graft.streaming.StreamingCluster]]) without re-running the
-    * corpus scans on every call. Built from ONE [[LloydKernel]] round
-    * over the lattice RDD (exact sums + floor division ≡
-    * [[updateCentroids]]; kernel ≡ DataFrame parity is
-    * ClusterOpsLoopSpec's pin).
+    * corpus scans on every call. Built from ONE
+    * [[LloydKernel.roundStats]] round over the lattice RDD (exact sums +
+    * floor division ≡ [[updateCentroids]]).
     */
   private val modelMemo =
     scala.collection.concurrent.TrieMap
@@ -472,9 +413,7 @@ object ClusterOps {
     modelMemo.getOrElseUpdate((s, dir), {
       val m0 = seedModel(s, dir)
       if (m0.isEmpty) Seq.empty
-      else LloydKernel
-        .roundStats(latticeRdd(s, dir).map(t => (t._2, t._3, t._4)), m0, None)
-        .map { case (cid, n, _, _, sv) => cid -> sv.map(_ / n) }
+      else updateLocal(LloydKernel.roundStats(latticeRdd(s, dir), m0, None))
     })
 
   /** Session-staged two-round Lloyd refinement:
@@ -489,14 +428,9 @@ object ClusterOps {
     * (round-11 directive #2). At a written-table deployment qv roughly
     * doubles the assignment table's footprint; that is the documented
     * trade for the downstream convergence run skipping two corpus scans.
-    *
-    * Round-19 shape: ONE [[LloydKernel]] map computes both rounds'
-    * argmins (m0 seeds for cid0, the kernel-built m1 for cid/dist) —
-    * the old form exploded the corpus ×K twice through
-    * crossJoin+window assignments and re-joined round 1 by vec_id
-    * (three corpus shuffles); this is zero-shuffle on the corpus path,
-    * and the distances/ties are identical by the kernel's spec'd
-    * parity with [[nearestStruct]]/[[roundStats]].
+    * Both rounds' argmins ([[nearestStruct]] under the seeds for cid0 and
+    * under the refined model for cid/dist) run in one zero-shuffle
+    * projection of the lattice.
     */
   private def refined(s: SparkSession, dir: String): DataFrame =
     graft.Staging.stage(s, dir, "kmeans_assign") {
@@ -510,25 +444,11 @@ object ClusterOps {
           .select(col("vec_id"), lit(0L).as("cid"), lit(0L).as("cid0"),
             lit(0L).as("dist"), col("qv"))
       else {
-        val m0a = LloydKernel.modelArrays(m0)
-        val m1a = LloydKernel.modelArrays(refinedModel(s, dir))
-        val rows = latticeRdd(s, dir).map { case (id, qv, qvd, qq) =>
-          val c1 = LloydKernel.nearest(qvd, qq, m0a)._1
-          val (c2, d2) = LloydKernel.nearest(qvd, qq, m1a)
-          org.apache.spark.sql.Row(id, c2, c1, d2, qv.toSeq)
-        }
-        s.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("cid",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("cid0",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("dist",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("qv",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.LongType, containsNull = false)))))
+        val a1 = argminStruct(m0)
+        val a2 = argminStruct(refinedModel(s, dir))
+        base.select(col("vec_id"), a2.getField("cid").as("cid"),
+          a1.getField("cid").as("cid0"), a2.getField("d").as("dist"),
+          col("qv"))
       }
     }
 
@@ -541,7 +461,8 @@ object ClusterOps {
                       list_transform(v, x ->
                         CAST(FLOOR(x * 1024 + 0.5) AS BIGINT) + 1024) AS qv
                FROM e
-               WHERE len(v) = ${graft.functions.VectorFns.Dims}),
+               WHERE len(v) = ${graft.functions.VectorFns.Dims}
+                 AND len(list_filter(v, x -> x IS NULL)) = 0),
         c0 AS (SELECT vec_id AS cid, qv AS cv FROM qn WHERE vec_id < $K),
         d1 AS (SELECT qn.vec_id, qn.qv, c0.cid,
                       CAST(list_dot_product(qn.qv, qn.qv)
@@ -640,23 +561,18 @@ object ClusterOps {
       "Lloyd iterated to CONVERGENCE (movement-based stop, fail-loud " +
         s"ceiling at $MaxRounds rounds): per-cluster membership, exact " +
         "integer inertia, and the confirming round count. One corpus-scan " +
-        "job per round against a driver-literal model (in-row argmin, no " +
+        "job per round against an in-memory K-row model (in-row argmin, no " +
         "lineage growth); the fixed-point property of the deterministic " +
         "lattice update is what lets the oracle replay a pinned round " +
         "count and recover the same answer."))
 }
 
-/** The Lloyd round arithmetic as a standalone serializable kernel (see
-  * [[ClusterOps.roundStatsLocal]]): one mapPartitions pass folds
-  * per-cluster (n, inertia, moved, exact lattice sums) and the ≤K
-  * per-partition maps merge via reduce. Bit-identical to the DataFrame
-  * round ([[ClusterOps.roundStats]]'s plan) — every term is an
-  * integer-valued double ≪ 2^53, so the dot-product fold order cannot
-  * matter, the truncating toLong equals Catalyst's cast to long, and
-  * ties break to the smallest cid exactly as nearestStruct's ascending
-  * (dist, cid) struct sort — at none of the per-round Catalyst
-  * planning/codegen fixed cost. ClusterOpsLoopSpec pins RDD-vs-DataFrame
-  * round parity including distance ties.
+/** The Lloyd round loop: one mapPartitions pass per round folds
+  * per-cluster (n, inertia, moved, exact lattice sums) with
+  * [[graft.functions.LatticeModel.nearest]], and the ≤K per-partition maps
+  * merge via reduce — one job per round, no per-round Catalyst planning.
+  * ClusterOpsLoopSpec pins it equal to the DataFrame round
+  * ([[ClusterOps.roundStats]]).
   */
 private[graft] object LloydKernel extends Serializable {
 
@@ -666,52 +582,21 @@ private[graft] object LloydKernel extends Serializable {
     val sums = new Array[Long](dims)
   }
 
-  /** (cid, cvd, cc) arrays for the closure-shipped model. */
-  def modelArrays(
-      m: Seq[(Long, Seq[Long])]): Array[(Long, Array[Double], Double)] =
-    m.map { case (cid, cv) =>
-      val cvd = cv.map(_.toDouble).toArray
-      var cc = 0.0
-      var i = 0
-      while (i < cvd.length) { cc += cvd(i) * cvd(i); i += 1 }
-      (cid, cvd, cc)
-    }.toArray
-
-  /** Nearest centroid under `model`: (cid, dist) — the Scala twin of
-    * ClusterOps.nearestStruct (exact; tie to smallest cid).
-    */
-  def nearest(qvd: Array[Double], qq: Double,
-      model: Array[(Long, Array[Double], Double)]): (Long, Long) = {
-    var bestD = Long.MaxValue
-    var bestC = Long.MaxValue
-    var k = 0
-    while (k < model.length) {
-      val (cid, cvd, cc) = model(k)
-      var dp = 0.0
-      var i = 0
-      while (i < cvd.length) { dp += qvd(i) * cvd(i); i += 1 }
-      val d = (qq - 2.0 * dp + cc).toLong
-      if (d < bestD || (d == bestD && cid < bestC)) { bestD = d; bestC = cid }
-      k += 1
-    }
-    (bestC, bestD)
-  }
-
   def roundStats(
       base: org.apache.spark.rdd.RDD[(Array[Long], Array[Double], Double)],
       m: Seq[(Long, Seq[Long])], prev: Option[Seq[(Long, Seq[Long])]])
       : Seq[(Long, Long, Long, Long, Seq[Long])] = {
-    val mArr = modelArrays(m)
-    val pArr = prev.map(modelArrays)
+    val cur = graft.functions.LatticeModel(m)
+    val before = prev.map(graft.functions.LatticeModel(_))
     base.mapPartitions { it =>
       val acc = scala.collection.mutable.HashMap.empty[Long, Acc]
       it.foreach { case (qv, qvd, qq) =>
-        val (cid, d) = nearest(qvd, qq, mArr)
+        val (cid, d) = cur.nearest(qvd, qq)
         val a = acc.getOrElseUpdate(cid, new Acc(qv.length))
         a.n += 1L
         a.inertia += d
-        val mv = pArr match {
-          case Some(p) => if (nearest(qvd, qq, p)._1 != cid) 1L else 0L
+        val mv = before match {
+          case Some(p) => if (p.nearest(qvd, qq)._1 != cid) 1L else 0L
           case None => 1L
         }
         a.moved += mv

@@ -47,33 +47,35 @@ object SimilarityOps {
 
   import graft.functions.VectorFns.{dot, norm, bucketArray}
 
-  // ---- IVF-PQ model (q128/q129): 8 subspaces x 8 dims, 16 codewords each.
-  // "Training" is deterministic and oracle-replayable like q46's coarse
-  // centroids: codeword k of subspace m is the m-th 8-dim slice of corpus
-  // vector k — a real build would k-means per subspace; the encode/ADC
-  // mechanics under test are identical either way. The codebook is a
-  // driver-side model (8*16*8 doubles — the broadcast-model shape a FAISS
-  // build ships to scoring nodes), collected once per (session, dir).
-  private[graft] val PqM = 8; private[graft] val PqDim = 8
+  import graft.functions.{AdcDistance, AnnModel, PqEncode}
+  import graft.functions.VectorModels.{PqDim, PqM}
+  import org.apache.spark.sql.graft.ColumnBridge
   private val PqK = 16
 
-  /** (codebook(m)(k) = 8-dim codeword, norms(m)(k) = left-fold <cw,cw>).
-    * Trains on the first 16 WELL-FORMED vectors (null / wrong-dimension
+  /** The IVF-PQ model (q128/q129) for (session, dir, nlist), memoized: the
+    * first-nlist coarse centroids the batch `assign` broadcasts plus the
+    * PQ codebook (8 subspaces x 8 dims, 16 codewords each) and its
+    * left-fold norms <cw,cw>. Every encode, route and ADC site — q128's
+    * build, the streaming ingest twin, the serve paths — reads this one
+    * model, so their codes and ADC are bit-identical by construction.
+    *
+    * "Training" is deterministic and oracle-replayable like q46's coarse
+    * centroids: codeword k of subspace m is the m-th 8-dim slice of the
+    * k-th WELL-FORMED corpus vector (null / wrong-dimension / null-element
     * vectors are no training data — DirtyEmbeddingsSpec); on a clean
-    * corpus that is exactly vec_id < 16, the oracle's `cent`. A dirty
-    * corpus with fewer than 16 valid vectors cycles them (never crashes);
-    * an all-dirty corpus degrades to a zero codebook.
+    * corpus that is exactly vec_id < 16, the oracle's `cent`. A real build
+    * would k-means per subspace; the encode/ADC mechanics under test are
+    * identical either way. A dirty corpus with fewer than 16 valid vectors
+    * cycles them (never crashes); an all-dirty corpus degrades to a zero
+    * codebook.
     */
-  private val pqModels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (IndexedSeq[IndexedSeq[Seq[Double]]], IndexedSeq[IndexedSeq[Double]])]
+  private val annModels = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, Int), AnnModel]
 
-  private def pqModel(s: SparkSession, dir: String)
-      : (IndexedSeq[IndexedSeq[Seq[Double]]], IndexedSeq[IndexedSeq[Double]]) =
-    pqModels.getOrElseUpdate((s, dir), {
+  private[graft] def annModel(s: SparkSession, dir: String): AnnModel =
+    annModels.getOrElseUpdate((s, dir, annNlist(s)), {
       val valid = vecs(s, dir)
-        .filter(col("v").isNotNull &&
-          size(col("v")) === graft.functions.VectorFns.Dims)
+        .filter(graft.functions.VectorFns.wellFormed(col("v")))
         .orderBy("vec_id").limit(PqK).collect().map(_.getSeq[Double](1))
       def cw(k: Int): Seq[Double] =
         if (valid.isEmpty) Seq.fill(graft.functions.VectorFns.Dims)(0.0)
@@ -82,96 +84,62 @@ object SimilarityOps {
         (0 until PqK).map(k => cw(k).slice(m * PqDim, (m + 1) * PqDim)))
       // same left-fold order as VecDot / DuckDB list_dot_product(cs, cs)
       val norms = cb.map(_.map(_.foldLeft(0.0)((acc, x) => acc + x * x)))
-      (cb, norms)
+      // the model keeps EVERY vec_id < 16 candidate, malformed or not:
+      // the batch window scores all of them, and a wrong-dim CORPUS
+      // vector legitimately wins cosine 1 against its own wrong-dim twin
+      // among the candidates — dropping malformed centroids made streamed
+      // routing diverge from batch on exactly that row (the round-18 q183
+      // dirty-lifecycle find). Against every other vector a malformed
+      // centroid scores null (cosine's guards) and never wins — identical
+      // to batch. A NULL embedding is carried as the EMPTY vector: it
+      // scores null in-row exactly like null does in the batch window
+      // (zero-norm guard ≡ null input), yet stays in the TIE-BREAK set —
+      // an all-null-cosine arrival must route to the minimum cid over the
+      // FULL candidate set, null-embedding centroids included, or
+      // streamed and batch assignment diverge on corpora whose minimum-id
+      // centroid is null (review-pass finding on the first version of
+      // this fix, which dropped nulls).
+      val cents = vecs(s, dir)
+        .filter(col("vec_id") < annNlist(s))
+        .collect().map(r => r.getLong(0) -> annCentroidVec(r, 1))
+        .toSeq.sortBy(_._1)
+      AnnModel(cents, cb, norms)
     })
 
-  /** Adds `code_0..code_7` PQ codes to a frame with vector column `vCol`:
-    * per subspace, argmin_k L2²(slice, codeword) with ties to the smallest
-    * k (array_position returns the FIRST index at the min — the oracle's
-    * ORDER BY dist, k). Pure projection: the encode pass is map-side at
-    * any corpus scale. Codes are NULL for any vector whose length is not
-    * exactly [[graft.functions.VectorFns.Dims]] — an over-long vector
-    * still slices to 8 real elements per subspace, so without the guard
-    * it would earn a plausible ADC from its first 64 dims and could
-    * outrank genuine neighbors (the wrong-but-plausible failure
-    * VectorFns.planeDot hard-errors on); null codes null the ADC, which
-    * sorts last.
+  /** Adds `code_0..code_7` PQ codes ([[graft.functions.PqEncode]]) to a
+    * frame with vector column `vCol`: per subspace, argmin_k L2²(slice,
+    * codeword) with ties to the smallest k (the oracle's ORDER BY dist, k).
+    * Pure projection: the encode pass is map-side at any corpus scale, and
+    * the eight codes read one encoded array per row. Codes are NULL for
+    * any vector whose length is not exactly
+    * [[graft.functions.VectorFns.Dims]] — an over-long vector would
+    * otherwise earn a plausible ADC from its first 64 dims and could
+    * outrank genuine neighbors; null codes null the ADC, which sorts last.
     */
   private[graft] def pqEncode(df: DataFrame, vCol: String,
-      cb: IndexedSeq[IndexedSeq[Seq[Double]]],
-      norms: IndexedSeq[IndexedSeq[Double]]): DataFrame =
-    (0 until PqM).foldLeft(df) { (d, m) =>
-      val sub = slice(col(vCol), m * PqDim + 1, PqDim)
-      val dists = array((0 until PqK).map { k =>
-        // l2² = <s,s> - 2<s,cw> + <cw,cw>, every dot a shared left fold —
-        // bit-identical on both engines, so the argmin agrees exactly
-        dot(sub, sub) - lit(2.0) * dot(sub, typedLit(cb(m)(k))) +
-          lit(norms(m)(k))
-      }: _*)
-      d.withColumn(s"__pd$m", dists)
-        .withColumn(s"code_$m",
-          when(size(col(vCol)) === graft.functions.VectorFns.Dims,
-            (array_position(col(s"__pd$m"), array_min(col(s"__pd$m"))) - 1)
-              .cast("int")))
-        .drop(s"__pd$m")
-    }
+      m: AnnModel): DataFrame =
+    df.withColumn("__pq",
+        ColumnBridge.column(PqEncode(ColumnBridge.expression(col(vCol)), m)))
+      .select(df.columns.map(col) ++
+        (0 until PqM).map(i => col("__pq").getItem(i).as(s"code_$i")): _*)
 
   /** Integer-scaled asymmetric PQ distance of query vector `qCol` against
-    * the `code_*` columns: Σ_m floor(l2²(q_m, codeword) * 1e9). Each term
-    * floors a bit-identical double, so the BIGINT sum is order-free and
-    * hash-exact — no float summation order anywhere.
+    * the `code_*` columns ([[graft.functions.AdcDistance]]):
+    * Σ_m floor(l2²(q_m, codeword) * 1e9). Each term floors a bit-identical
+    * double, so the BIGINT sum is order-free and hash-exact.
     */
-  private[graft] def adcDistance(qCol: String,
-      cb: IndexedSeq[IndexedSeq[Seq[Double]]],
-      norms: IndexedSeq[IndexedSeq[Double]]): Column =
-    (0 until PqM).map { m =>
-      val qs = slice(col(qCol), m * PqDim + 1, PqDim)
-      val cw = element_at(typedLit(cb(m)), col(s"code_$m") + 1)
-      val cc = element_at(typedLit(norms(m)), col(s"code_$m") + 1)
-      floor((dot(qs, qs) - lit(2.0) * dot(qs, cw) + cc) * lit(1e9))
-    }.reduce(_ + _)
-
-  /** The IVF-PQ model bundle for the streaming ingest twin
-    * (graft.streaming.StreamingAnn): the same first-16 coarse centroids
-    * the batch `assign` broadcasts (collected — 16 rows, the model-build
-    * shape), plus the shared PQ codebook/norms. Built from the SAME
-    * memoized pqModel, so streamed codes and ADC are bit-identical to
-    * q128's by construction.
-    */
-  private[graft] def annModel(s: SparkSession, dir: String)
-      : (Seq[(Long, Seq[Double])],
-         IndexedSeq[IndexedSeq[Seq[Double]]],
-         IndexedSeq[IndexedSeq[Double]]) = {
-    val (cb, norms) = pqModel(s, dir)
-    // the model keeps EVERY vec_id < 16 candidate, malformed or not:
-    // the batch window scores all of them, and a wrong-dim CORPUS
-    // vector legitimately wins cosine 1 against its own wrong-dim twin
-    // among the candidates — dropping malformed centroids made streamed
-    // routing diverge from batch on exactly that row (the round-18 q183
-    // dirty-lifecycle find). Against every other vector a malformed
-    // centroid scores null (cosine's guards) and never wins — identical
-    // to batch. A NULL embedding is carried as the EMPTY vector: it
-    // scores null in-row exactly like null does in the batch window
-    // (zero-norm guard ≡ null input), yet stays in the TIE-BREAK set —
-    // an all-null-cosine arrival must route to the minimum cid over the
-    // FULL candidate set, null-embedding centroids included, or
-    // streamed and batch assignment diverge on corpora whose minimum-id
-    // centroid is null (review-pass finding on the first version of
-    // this fix, which dropped nulls).
-    val cents = vecs(s, dir)
-      .filter(col("vec_id") < annNlist(s))
-      .collect().map(r => r.getLong(0) -> annCentroidVec(r, 1))
-      .toSeq.sortBy(_._1)
-    (cents, cb, norms)
-  }
+  private[graft] def adcDistance(qCol: String, m: AnnModel): Column =
+    ColumnBridge.column(AdcDistance(ColumnBridge.expression(col(qCol)),
+      ColumnBridge.expression(array((0 until PqM).map(i => col(s"code_$i")): _*)),
+      m))
 
   /** A centroid row's vector for the driver-side model. A null embedding
     * AND an embedding with a null ELEMENT both become the EMPTY vector:
     * the batch window's cosine scores either null against every vector,
     * and so does the empty vector, which stays in the tie-break set. A
     * null element kept in a `Seq[Double]` would instead unbox to 0.0 in
-    * the kernel's model arrays and score a number the batch never sees
-    * (AnnEncodeKernelSpec's null-element centroid).
+    * the model's arrays and score a number the batch never sees
+    * (VectorModelsSpec's null-element centroid).
     */
   private[graft] def annCentroidVec(r: Row, i: Int): Seq[Double] =
     if (r.isNullAt(i) || r.getSeq[Any](i).contains(null)) Seq.empty
@@ -565,7 +533,7 @@ object SimilarityOps {
     */
   private[graft] def ivfpqInMemoryTop5(s: SparkSession, dir: String)
       : DataFrame = {
-    val (cb, norms) = pqModel(s, dir)
+    val m = annModel(s, dir)
     val base = vecs(s, dir)
     val centroids = coarseCentroids(base)
     // corpus: nearest coarse list + PQ codes (both pure projections after
@@ -574,7 +542,7 @@ object SimilarityOps {
       coarseAssign(base.filter(col("vec_id") >= 5)
         .select(col("vec_id").as("neighbor_id"), col("v").as("nv")),
         centroids, "neighbor_id", "nv", 1),
-      "nv", cb, norms).drop("nv")
+      "nv", m).drop("nv")
     val probes = coarseAssign(base.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv")),
       centroids, "query_id", "qv", 2)
@@ -584,7 +552,7 @@ object SimilarityOps {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").asc_nulls_last, col("neighbor_id"))
     probes.join(lists, "cid")
-      .withColumn("adc", adcDistance("qv", cb, norms))
+      .withColumn("adc", adcDistance("qv", m))
       .withColumn("rank", row_number().over(w).cast("int"))
       .filter(col("rank") <= 5)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc"))
@@ -622,7 +590,7 @@ object SimilarityOps {
     */
   private def serveIndexTop5(s: SparkSession, dir: String,
       idx: DataFrame): DataFrame = {
-    val (cb, norms) = pqModel(s, dir)
+    val m = annModel(s, dir)
     val base = vecs(s, dir)
     val probes = coarseAssign(base.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv")),
@@ -631,7 +599,7 @@ object SimilarityOps {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").asc_nulls_last, col("neighbor_id"))
     probes.join(idx, "cid")
-      .withColumn("adc", adcDistance("qv", cb, norms))
+      .withColumn("adc", adcDistance("qv", m))
       .withColumn("rank", row_number().over(w).cast("int"))
       .filter(col("rank") <= 5)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc"))
@@ -794,7 +762,6 @@ object SimilarityOps {
     */
   private[graft] def annIndexLists(s: SparkSession, dir: String)
       : DataFrame = {
-    val (cb, norms) = pqModel(s, dir)
     val raw = Tables(s, dir, "embeddings")
     // filterable metadata rides the index rows (the q178 serving
     // question: a filtered probe pushes its predicate into the list
@@ -803,23 +770,11 @@ object SimilarityOps {
     // Missing column → null lab, same tolerance as q178's Spark side.
     val labCol = if (raw.columns.contains("label"))
       col("label").cast("int") else lit(null).cast("int")
-    val base = raw.filter(col("vec_id") >= 5)
-      .select(col("vec_id").cast("long").as("neighbor_id"),
-        transform(col("embedding"), x => x.cast("double")).as("nv"),
-        labCol.as("lab"))
-    // round-20: the corpus rank-1 assignment + PQ encode run through the
-    // RDD kernel — one mapPartitions pass replaces the crossJoin(16
-    // broadcast centroids) + per-vector window argmax (a corpus x nlist
-    // exploded frame and its sort) AND the per-build Catalyst
-    // optimization+codegen of the encode literal tree. Exactness:
-    // routeIds ≡ the coarseAssign window is the round-18
-    // StreamingAnnSpec proof; kernel ≡ ingest (routeIds + pqEncode) is
-    // AnnEncodeKernelSpec; appended-tree ≡ this build's content is
-    // StreamingAnnAppendSpec's row-set assertion — and the DuckDB
-    // oracle replays the full windowed argmax arithmetic on every gate.
-    val (cents, _, _) = annModel(s, dir)
-    graft.streaming.AnnEncodeKernel.encode(base,
-      graft.streaming.StreamingAnn.Model(cents, cb, norms))
+    graft.streaming.StreamingAnn.indexRows(
+      raw.filter(col("vec_id") >= 5)
+        .select(col("vec_id").cast("long").as("neighbor_id"),
+          col("embedding"), labCol.as("lab")),
+      annModel(s, dir))
   }
 
   /** Writes a lists frame as a fresh index tree under `root` — the q176
@@ -905,46 +860,15 @@ object SimilarityOps {
       nRows: Long, checksum: Long, lastBatch: Long,
       lastTombstoneBatch: Long, modelFp: Option[Long], runId: String)
 
-  /** Deterministic fingerprint of the ANN model (coarse centroids + PQ
-    * codebook) — FNV-1a over the raw double bits plus shape markers. The
-    * stored PQ codes are only meaningful under the model that produced
-    * them: a tree served or appended under a drifted model (corpus
-    * first-N vectors changed, a future re-train) computes ADC against
-    * the wrong codebook SILENTLY — the fingerprint in the manifest turns
-    * that into a fail-loud refusal (round-18 judge's #2).
-    */
-  private[graft] def annModelFingerprint(
-      cents: Seq[(Long, Seq[Double])],
-      cb: IndexedSeq[IndexedSeq[Seq[Double]]]): Long = {
-    var h = 0xcbf29ce484222325L
-    def mix(v: Long): Unit = { h ^= v; h *= 0x100000001b3L }
-    mix(cents.length.toLong)
-    for ((cid, cv) <- cents) {
-      mix(cid); mix(cv.length.toLong)
-      cv.foreach(d => mix(java.lang.Double.doubleToLongBits(d)))
-    }
-    mix(cb.length.toLong)
-    for (sub <- cb) { mix(sub.length.toLong)
-      for (cw <- sub) { mix(cw.length.toLong)
-        cw.foreach(d => mix(java.lang.Double.doubleToLongBits(d))) } }
-    h
-  }
-
-  // memoized per (session, dir, nlist) like pqModels: the fingerprint
-  // guards every steady-state serve, so it must not cost a centroid
-  // collect per run; nlist is in the key because a sweep session flips
-  // the conf mid-session and the centroid set follows it
-  private val annModelFps = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), Long]
-
-  /** Fingerprint of the model the given corpus dir trains — what every
-    * writer stamps and every serve/append path expects.
+  /** Fingerprint of the model the given corpus dir trains
+    * ([[graft.functions.AnnModel.fingerprint]]) — what every writer stamps
+    * and every serve/append path expects. A tree served or appended under
+    * a drifted model (corpus first-N vectors changed, a future re-train)
+    * would compute ADC against the wrong codebook SILENTLY; the
+    * fingerprint in the manifest turns that into a fail-loud refusal.
     */
   private[graft] def annModelFp(s: SparkSession, dir: String): Long =
-    annModelFps.getOrElseUpdate((s, dir, annNlist(s)), {
-      val (cents, cb, _) = annModel(s, dir)
-      annModelFingerprint(cents, cb)
-    })
+    annModel(s, dir).fingerprint
 
   /** On-disk index manifest — LIVE rows + the order-independent checksum
     * (+ watermarks, model fingerprint, run id) as a `_MANIFEST.json` file
@@ -2318,15 +2242,15 @@ object SimilarityOps {
         // what PQ compression + narrower probing cost under a filter —
         // the third point on the serving-architecture curve: bolt-on
         // post-filter vs scoring-pass pre-filter vs index-native filter.
-        val (cb, norms) = pqModel(s, dir)
+        val m = annModel(s, dir)
         val (ipath, _, _) = annIndexFiles(s, dir)
-        val fIdx = readAnnIndexLive(s, ipath, annModelFp(s, dir))
+        val fIdx = readAnnIndexLive(s, ipath, m.fingerprint)
           .filter(col("lab") === Pred)
         val iProbes = coarseAssign(base.filter(col("vec_id") < 5)
           .select(col("vec_id").as("query_id"), col("v").as("qv")),
           centroids, "query_id", "qv", 2)
         val iCands = iProbes.join(fIdx, "cid")
-          .withColumn("adc", adcDistance("qv", cb, norms))
+          .withColumn("adc", adcDistance("qv", m))
         val wA = Window.partitionBy(col("query_id"))
           .orderBy(col("adc").asc_nulls_last, col("neighbor_id"))
         // the index-native arm gets the same one-pass treatment over its
@@ -2538,9 +2462,9 @@ object SimilarityOps {
         import s.implicits._
         val K = 5; val maxShort = 20
         val shortGrid = Seq(5L, 10L, 20L)
-        val (cb, norms) = pqModel(s, dir)
+        val m = annModel(s, dir)
         val (path, _, _) = annIndexFiles(s, dir)
-        val idx = readAnnIndexLive(s, path, annModelFp(s, dir))
+        val idx = readAnnIndexLive(s, path, m.fingerprint)
         val base = vecs(s, dir)
         val probes = coarseAssign(base.filter(col("vec_id") < 5)
           .select(col("vec_id").as("query_id"), col("v").as("qv")),
@@ -2551,7 +2475,7 @@ object SimilarityOps {
         val wA = Window.partitionBy(col("query_id"))
           .orderBy(col("adc").asc_nulls_last, col("neighbor_id"))
         val shortlisted = probes.join(idx, "cid")
-          .withColumn("adc", adcDistance("qv", cb, norms))
+          .withColumn("adc", adcDistance("qv", m))
           .withColumn("adc_rank", row_number().over(wA))
           .filter(col("adc_rank") <= maxShort)
           .select(col("query_id"), col("qv"), col("neighbor_id"),

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFns.cosine
+import org.apache.spark.sql.graft.ColumnBridge
+
+import graft.functions.{AnnModel, AnnRoute}
 import graft.queries.SimilarityOps
 
 /** Streaming ingest twin for the IVF-PQ ANN arm (batch q128/q129) — the
@@ -17,11 +19,12 @@ import graft.queries.SimilarityOps
   *
   * The batch pipeline assigns coarse lists with a crossJoin + window
   * argmax (fine batch-side: the window is partitioned by vector id). A
-  * stream cannot run that window, so [[routeIds]] expresses the SAME
-  * argmax — cosine desc, ties to the smaller cid — as an array_sort over
-  * a literal centroid array: a pure projection with identical tie rules,
-  * which is what makes streamed-ingest ≡ batch-index provable rather than
-  * approximate (StreamingAnnSpec).
+  * stream cannot run that window, so [[routeIds]] computes the SAME
+  * argmax — cosine desc, ties to the smaller cid — in-row with the
+  * model-carrying [[graft.functions.AnnRoute]] expression: a pure
+  * projection with identical tie rules, which is what makes
+  * streamed-ingest ≡ batch-index provable rather than approximate
+  * (StreamingAnnSpec).
   *
   * Serving is per-micro-batch: [[serveTopK]] answers a batch of arriving
   * queries against the staged index (stream side = queries via
@@ -34,51 +37,23 @@ object StreamingAnn {
   /** The model bundle: coarse centroids + PQ codebook/norms, from the
     * same memoized build as q128 (SimilarityOps.annModel).
     */
-  final case class Model(
-      centroids: Seq[(Long, Seq[Double])],
-      cb: IndexedSeq[IndexedSeq[Seq[Double]]],
-      norms: IndexedSeq[IndexedSeq[Double]])
-
-  def model(s: org.apache.spark.sql.SparkSession, dir: String): Model = {
-    val (cents, cb, norms) = SimilarityOps.annModel(s, dir)
-    Model(cents, cb, norms)
-  }
+  def model(s: org.apache.spark.sql.SparkSession, dir: String): AnnModel =
+    SimilarityOps.annModel(s, dir)
 
   /** Float→double vector column (the Tables/vecs cast, usable on a
-    * streamed frame with a raw `embedding` array<float> column).
+    * streamed frame with a raw `embedding` array<float> column) — an
+    * array cast, so the projection stays in whole-stage codegen.
     */
-  def toDouble(embedding: Column): Column =
-    transform(embedding, x => x.cast("double"))
+  def toDouble(embedding: Column): Column = embedding.cast("array<double>")
 
-  /** Top-`keep` coarse list ids for vector column `vCol`, IN-ROW: sort a
-    * literal (−cosine, cid) struct array — ascending on the negated
-    * cosine then cid reproduces the batch window's ORDER BY cdist DESC,
-    * cid ASC exactly, including the degenerate orders: the batch desc
-    * window ranks NaN above every real double (Spark's total order), and
-    * −NaN is still NaN (which would sort LAST ascending), so NaN maps to
-    * −MaxValue to keep it winning; a null cosine (malformed vector —
-    * cosine's zero-norm guard) maps to +MaxValue, after every real
-    * score, matching desc's nulls-last. Either way the malformed
-    * arrival routes deterministically and its PQ codes are null
-    * (pqEncode guards), so its ADC can never outrank a real candidate.
+  /** Top-`keep` coarse list ids for vector column `vCol`, in-row: the
+    * batch window's ORDER BY cdist DESC, cid ASC, including its
+    * degenerate orders (graft.functions.VectorModels states them). A
+    * malformed arrival routes deterministically and its PQ codes are null,
+    * so its ADC can never outrank a real candidate.
     */
-  def routeIds(vCol: Column, m: Model, keep: Int): Column = {
-    if (m.centroids.isEmpty)
-      // a model over an EMPTY vector table (annModel keeps every
-      // vec_id < 16 candidate — null embeddings ride as empty vectors —
-      // so only a zero-row table gets here) has nowhere to route:
-      // empty assignment, not an analysis error
-      typedLit(Seq.empty[Long])
-    else {
-      val arr = array(m.centroids.map { case (cid, cv) =>
-        val d = cosine(vCol, typedLit(cv))
-        val nd = when(isnan(d), lit(-Double.MaxValue))
-          .otherwise(coalesce(-d, lit(Double.MaxValue)))
-        struct(nd.as("nd"), lit(cid).as("cid"))
-      }: _*)
-      transform(slice(array_sort(arr), 1, keep), x => x.getField("cid"))
-    }
-  }
+  def routeIds(vCol: Column, m: AnnModel, keep: Int): Column =
+    ColumnBridge.column(AnnRoute(ColumnBridge.expression(vCol), m, keep))
 
   /** Ingest projection: a (streaming or batch) frame with `idCol` and a
     * raw float `embedding` column → (idCol, [keepCols,] cid,
@@ -88,7 +63,7 @@ object StreamingAnn {
     * commit). `keepCols` = passthrough metadata columns (the index's
     * `lab`), same rationale as the batch writer's coarseAssign extra.
     */
-  def ingest(vecsDf: DataFrame, idCol: String, m: Model,
+  def ingest(vecsDf: DataFrame, idCol: String, m: AnnModel,
       keepCols: Seq[String] = Nil): DataFrame =
     SimilarityOps.pqEncode(
       vecsDf.select(col(idCol) +: keepCols.map(col) :+
@@ -97,8 +72,16 @@ object StreamingAnn {
         // degrade to a null cid, and element_at(<empty>, 1) is a runtime
         // INVALID_ARRAY_INDEX error under ANSI mode (the session default)
         .withColumn("cid", get(routeIds(col("nv"), m, 1), lit(0))),
-      "nv", m.cb, m.norms)
+      "nv", m)
       .drop("nv")
+
+  /** [[ingest]] over (neighbor_id, embedding, lab) rows, in the index-row
+    * layout: the one encode of the index build and of [[appendBatch]].
+    */
+  private[graft] def indexRows(rows: DataFrame, m: AnnModel): DataFrame =
+    ingest(rows, "neighbor_id", m, keepCols = Seq("lab"))
+      .select(org.apache.spark.sql.types.StructType
+        .fromDDL(SimilarityOps.annIndexSchema).fieldNames.map(col): _*)
 
   /** Incremental index maintenance — the append path of the q180
     * artifact (round-18, the round-17 judge's #3: the serving fleet's
@@ -193,7 +176,7 @@ object StreamingAnn {
     * tree against the manifest). The default keeps the per-batch
     * contract for every production/spec path.
     */
-  def appendBatch(batch: DataFrame, idCol: String, m: Model,
+  def appendBatch(batch: DataFrame, idCol: String, m: AnnModel,
       indexDir: String, batchId: Long = -1L,
       runId: String = "", verifyStaged: Boolean = true): (Long, Long) = {
     import org.apache.hadoop.fs.Path
@@ -210,7 +193,7 @@ object StreamingAnn {
     // codebook are garbage under another — refuse, never blend. A legacy
     // manifest (no fingerprint) warns and ADOPTS this appender's
     // fingerprint at commit: from that append on, the tree is pinned.
-    val fp = SimilarityOps.annModelFingerprint(m.centroids, m.cb)
+    val fp = m.fingerprint
     mf.modelFp match {
       case Some(have) if have != fp =>
         throw new IllegalStateException(
@@ -241,16 +224,9 @@ object StreamingAnn {
       if (batch.columns.contains("label"))
         batch.withColumn("lab", col("label").cast("int"))
       else batch.withColumn("lab", lit(null).cast("int"))
-    // encode through the RDD kernel (round-20): appendBatch always runs
-    // in a BATCH context (foreachBatch hands over a batch frame), and
-    // the kernel skips the per-append Catalyst optimization+codegen of
-    // the 16-cosine + 8x16-distance literal tree (~0.5 s/batch of pure
-    // fixed cost) while staying bit-identical to [[ingest]]
-    // (AnnEncodeKernelSpec pins parity incl. every malformed-vector
-    // degrade and tie rule)
-    val encoded = AnnEncodeKernel.encode(
+    val encoded = indexRows(
       withLab.select(col(idCol).cast("long").as("neighbor_id"),
-        toDouble(col("embedding")).as("nv"), col("lab")), m)
+        col("embedding"), col("lab")), m)
     // a tombstoned id stays dead until compaction reclaims the marker:
     // an arriving row for it is filtered HERE (the manifest counts live
     // rows, and serving anti-joins the same set — an unfiltered append
@@ -499,7 +475,7 @@ object StreamingAnn {
     * rules.
     */
   def serveTopK(queries: DataFrame, idCol: String, lists: DataFrame,
-      m: Model, k: Int = 5): DataFrame = {
+      m: AnnModel, k: Int = 5): DataFrame = {
     val probes = queries
       .select(col(idCol).as("query_id"),
         toDouble(col("embedding")).as("qv"))
@@ -507,249 +483,9 @@ object StreamingAnn {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").asc_nulls_last, col("neighbor_id"))
     probes.join(lists, "cid")
-      .withColumn("adc", SimilarityOps.adcDistance("qv", m.cb, m.norms))
+      .withColumn("adc", SimilarityOps.adcDistance("qv", m))
       .withColumn("rank", row_number().over(w).cast("int"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc"))
-  }
-}
-
-/** The route+PQ-encode arithmetic as a standalone serializable kernel —
-  * the RDD twin of [[StreamingAnn.ingest]] (round-20; the round-19
-  * LloydKernel precedent). The Catalyst form plans a ~16-cosine +
-  * 8x16-distance literal expression tree whose optimization + codegen
-  * cost (~0.5 s) is paid PER PLAN — once per micro-batch append, once
-  * per index build, once even for an empty seed — while the actual
-  * arithmetic over a batch is microseconds-to-milliseconds. This kernel
-  * runs the identical arithmetic as one mapPartitions pass at none of
-  * that fixed cost, and stays exact:
-  *
-  *   - dot products are VecDot's strict left-to-right IEEE fold (null on
-  *     length mismatch or a null element — zip_with semantics);
-  *   - the route is routeIds' argmin over (nd, cid) with nd = -cosine,
-  *     NaN mapped to -MaxValue (NaN wins the desc window), null cosine
-  *     (zero norm / malformed) mapped to +MaxValue (sorts last), ties to
-  *     the smallest cid;
-  *   - PQ codes replay pqEncode: per subspace argmin of
-  *     l2² = <s,s> - 2<s,cw> + <cw,cw> with array_min/array_position
-  *     semantics (nulls skipped, NaN greatest, -0.0 == 0.0, FIRST index
-  *     at the min), codes null unless the vector is exactly Dims long;
-  *   - double comparisons use Spark SQL's total order (NaN greatest,
-  *     -0.0 == 0.0 — SQLOrderingUtil.compareDoubles), not
-  *     java.lang.Double.compare, so an engineered -0.0/0.0 cosine tie
-  *     breaks by cid exactly like the struct sort.
-  *
-  * AnnEncodeKernelSpec pins kernel ≡ ingest row-for-row on the real
-  * corpus AND on an adversarial fixture (null / empty / wrong-dim /
-  * null-element / NaN vectors, duplicate centroids for exact ties, an
-  * empty model). Batch contexts only (appendBatch runs inside
-  * foreachBatch, which hands over a BATCH frame; the streaming-legal
-  * Column form [[StreamingAnn.ingest]] remains the projection the
-  * streamed-≡-batch proofs pin).
-  */
-private[graft] object AnnEncodeKernel extends Serializable {
-
-  import graft.queries.SimilarityOps.{PqM, PqDim}
-
-  /** Spark SQL's double total order: NaN greatest, NaN == NaN,
-    * -0.0 == 0.0 (SQLOrderingUtil.compareDoubles).
-    */
-  def cmpD(x: Double, y: Double): Int =
-    if (x < y) -1
-    else if (x > y) 1
-    else if (x == y) 0
-    else if (java.lang.Double.isNaN(x))
-      (if (java.lang.Double.isNaN(y)) 0 else 1)
-    else -1
-
-  /** Closure-shipped model: (cid, cv, <cv,cv>) per centroid (norms
-    * precomputed with the same left fold VecDot runs per row — the
-    * value is bit-identical because the fold is deterministic), plus
-    * the codebook and its precomputed norms exactly as pqEncode embeds
-    * them as literals.
-    */
-  final case class ModelArrays(
-      cents: Array[(Long, Array[Double], Double)],
-      cb: Array[Array[Array[Double]]],
-      norms: Array[Array[Double]])
-
-  def modelArrays(m: StreamingAnn.Model): ModelArrays = {
-    val cents = m.centroids.map { case (cid, cv) =>
-      val a = cv.toArray
-      var nb = 0.0
-      var i = 0
-      while (i < a.length) { nb += a(i) * a(i); i += 1 }
-      (cid, a, nb)
-    }.toArray
-    ModelArrays(cents,
-      m.cb.map(_.map(_.toArray).toArray).toArray,
-      m.norms.map(_.toArray).toArray)
-  }
-
-  /** VecDot's fold over a (possibly null-element) row vector and a clean
-    * model vector: null on length mismatch or any null element, else the
-    * strict left-to-right sum of products.
-    */
-  private def dotRowModel(a: Array[java.lang.Double],
-      b: Array[Double]): java.lang.Double = {
-    if (a.length != b.length) return null
-    var s = 0.0
-    var i = 0
-    while (i < a.length) {
-      val x = a(i)
-      if (x == null) return null
-      s += x.doubleValue() * b(i)
-      i += 1
-    }
-    java.lang.Double.valueOf(s)
-  }
-
-  /** VecDot(v, v) — null on any null element. */
-  private def dotSelf(a: Array[java.lang.Double]): java.lang.Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length) {
-      val x = a(i)
-      if (x == null) return null
-      val d = x.doubleValue()
-      s += d * d
-      i += 1
-    }
-    java.lang.Double.valueOf(s)
-  }
-
-  /** routeIds(v, m, 1) ++ get(..., 0): the argmin cid over (nd, cid) —
-    * null only for an empty model.
-    */
-  def routeOne(nv: Array[java.lang.Double],
-      ma: ModelArrays): java.lang.Long = {
-    val cents = ma.cents
-    if (cents.length == 0) return null
-    val na: java.lang.Double = if (nv == null) null else dotSelf(nv)
-    var bestNd = 0.0
-    var bestCid = 0L
-    var first = true
-    var k = 0
-    while (k < cents.length) {
-      val (cid, cv, nb) = cents(k)
-      // cosine(nv, cv) with VectorFns.cosine's exact guard shape:
-      // d = sqrt(<a,a>) * sqrt(<b,b>); when(d =!= 0.0, <a,b> / d).
-      // A null <a,a> (null vector / null element) nulls d and the
-      // whole cosine; d == 0.0 (zero norm, empty vectors included)
-      // nulls it via the guard; a length mismatch nulls the numerator.
-      // NaN flows through d =!= 0.0 (true) into a NaN cosine.
-      var cosNull = false
-      var cos = 0.0
-      if (nv == null || na == null) cosNull = true
-      else {
-        val den = math.sqrt(na.doubleValue()) * math.sqrt(nb)
-        if (den == 0.0) cosNull = true
-        else {
-          val num = dotRowModel(nv, cv)
-          if (num == null) cosNull = true
-          else cos = num.doubleValue() / den
-        }
-      }
-      val nd =
-        if (cosNull) Double.MaxValue
-        else if (java.lang.Double.isNaN(cos)) -Double.MaxValue
-        else -cos
-      val c = if (first) -1 else cmpD(nd, bestNd)
-      if (first || c < 0 || (c == 0 && cid < bestCid)) {
-        bestNd = nd; bestCid = cid; first = false
-      }
-      k += 1
-    }
-    java.lang.Long.valueOf(bestCid)
-  }
-
-  /** pqEncode's per-subspace argmin — codes null unless the vector is
-    * exactly `dims` long; a null-element subspace yields null distances
-    * (skipped by the array_min semantics); all-null distances yield a
-    * null code.
-    */
-  def pqCodes(nv: Array[java.lang.Double], ma: ModelArrays,
-      dims: Int): Array[java.lang.Integer] = {
-    val out = new Array[java.lang.Integer](PqM)
-    if (nv == null || nv.length != dims) return out
-    var m = 0
-    while (m < PqM) {
-      val cws = ma.cb(m)
-      val nms = ma.norms(m)
-      // sub = slice(v, m*PqDim+1, PqDim); <s,s> once per subspace, like
-      // the shared-fold literal tree (deterministic, so computing it
-      // once is bit-identical to computing it 16 times)
-      var ssNull = false
-      var ss = 0.0
-      var i = 0
-      while (i < PqDim && !ssNull) {
-        val x = nv(m * PqDim + i)
-        if (x == null) ssNull = true
-        else { val d = x.doubleValue(); ss += d * d }
-        i += 1
-      }
-      var best = 0.0
-      var bestK = -1
-      var k = 0
-      while (k < cws.length) {
-        // dist_k = <s,s> - 2<s,cw_k> + <cw_k,cw_k>; null (skipped) when
-        // the subspace holds a null element
-        if (!ssNull) {
-          val cw = cws(k)
-          var dp = 0.0
-          var dpNull = false
-          var j = 0
-          while (j < PqDim && !dpNull) {
-            val x = nv(m * PqDim + j)
-            if (x == null) dpNull = true
-            else dp += x.doubleValue() * cw(j)
-            j += 1
-          }
-          if (!dpNull) {
-            val dist = ss - 2.0 * dp + nms(k)
-            if (bestK < 0 || cmpD(dist, best) < 0) { best = dist; bestK = k }
-          }
-        }
-        k += 1
-      }
-      out(m) = if (bestK < 0) null else java.lang.Integer.valueOf(bestK)
-      m += 1
-    }
-    out
-  }
-
-  /** One kernel pass over a PREPARED batch frame — (neighbor_id LONG,
-    * nv ARRAY<DOUBLE>, lab INT) — producing the index-row schema
-    * (neighbor_id, code_0..7, lab, cid) exactly as
-    * `ingest(...).select(...)` does in the appendBatch/annIndexLists
-    * paths.
-    */
-  def encode(prepared: org.apache.spark.sql.DataFrame,
-      m: StreamingAnn.Model): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val s = prepared.sparkSession
-    val ma = modelArrays(m)
-    val dims = graft.functions.VectorFns.Dims
-    val rdd = prepared.rdd.mapPartitions { it =>
-      it.map { r =>
-        val id: java.lang.Long =
-          if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
-        val nv: Array[java.lang.Double] =
-          if (r.isNullAt(1)) null
-          else r.getSeq[java.lang.Double](1).toArray
-        val lab: java.lang.Integer =
-          if (r.isNullAt(2)) null else java.lang.Integer.valueOf(r.getInt(2))
-        val codes = pqCodes(nv, ma, dims)
-        val cid = routeOne(nv, ma)
-        Row.fromSeq(id +: codes.toSeq :+ lab :+ cid)
-      }
-    }
-    val schema = StructType(
-      StructField("neighbor_id", LongType) +:
-        (0 until PqM).map(i => StructField(s"code_$i", IntegerType)) :+
-        StructField("lab", IntegerType) :+
-        StructField("cid", LongType))
-    s.createDataFrame(rdd, schema)
   }
 }

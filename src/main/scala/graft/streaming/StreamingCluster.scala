@@ -11,9 +11,9 @@ import graft.queries.ClusterOps
   * offline (q141's batch Lloyd refinement), and ingest-time work is pure
   * per-row assignment plus occupancy accounting. Assignment is a
   * stateless in-row argmin against the refined centroid model shipped
-  * inside the plan as a literal (≤K rows — the StreamingAnn routing
-  * discipline), so it is streaming-legal on an unbounded feed with no
-  * shuffle and no per-row state; the only state is the occupancy
+  * inside the plan (≤K rows — the StreamingAnn routing discipline), so
+  * it is streaming-legal on an unbounded feed with no shuffle and no
+  * per-row state; the only state is the occupancy
   * aggregation itself, ≤K long counters regardless of ingest volume.
   *
   * Why occupancy: during a 100 TB corpus build, per-cluster arrival
@@ -23,12 +23,12 @@ import graft.queries.ClusterOps
   * sample drawn from it, q142) needs retraining.
   *
   * The batch argmin is a crossJoin + window (rn=1, dist asc, cid asc). A
-  * stream cannot run that window, so [[assignCol]] expresses the SAME
-  * argmin — including tie rules — as an array_sort over literal
-  * (dist, cid) structs: ascending struct order IS (dist asc, cid asc).
-  * Distances are the exact integer-lattice squared L2 of the batch side
-  * (all values ≪ 2^53, every product exact in double), which is what
-  * makes streamed ≡ batch PROVABLE (StreamingClusterSpec) rather than
+  * stream cannot run that window, so [[assignCol]] computes the SAME
+  * argmin — including tie rules — in-row with ClusterOps.nearestStruct
+  * (the model-carrying graft.functions.LatticeNearest). Distances are
+  * the exact integer-lattice squared L2 of the batch side (all values
+  * ≪ 2^53, every product exact in double), which is what makes streamed
+  * ≡ batch PROVABLE (StreamingClusterSpec) rather than
   * approximately-equal.
   */
 object StreamingCluster {
@@ -39,23 +39,14 @@ object StreamingCluster {
 
   /** Nearest refined centroid id for a raw float `embedding` column,
     * entirely in-row. Input must be pre-filtered to well-formed vectors
-    * ([[wellFormed]]) — the batch lattice contract.
+    * ([[VectorFns.wellFormed]]) — the batch lattice contract.
     */
   def assignCol(embCol: Column, m: Seq[(Long, Seq[Long])]): Column = {
-    // the struct-array argmin arithmetic lives in ONE place —
-    // ClusterOps.nearestStruct — shared with the batch convergence loop,
-    // so a tie-rule or lattice edit can never diverge the streamed ≡
-    // batch equivalence one-sidedly
-    val qvd = transform(
-      ClusterOps.quant(StreamingAnn.toDouble(embCol)),
-      x => x.cast("double"))
+    val qvd = ClusterOps.quant(StreamingAnn.toDouble(embCol))
+      .cast("array<double>")
     val qq = VectorFns.dot(qvd, qvd)
     ClusterOps.nearestStruct(qvd, qq, m).getField("cid")
   }
-
-  /** The batch lattice's well-formed rule, as a streaming-legal filter. */
-  def wellFormed(embCol: Column): Column =
-    embCol.isNotNull && size(embCol) === VectorFns.Dims
 
   /** Per-cluster occupancy of a (streaming or batch) frame with a raw
     * float `embedding` column: assignment projection + a ≤K-row count
@@ -64,7 +55,7 @@ object StreamingCluster {
     */
   def occupancy(vecsDf: DataFrame, m: Seq[(Long, Seq[Long])]): DataFrame =
     vecsDf
-      .filter(wellFormed(col("embedding")))
+      .filter(VectorFns.wellFormed(col("embedding")))
       .select(assignCol(col("embedding"), m).as("cid"))
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_members"))
@@ -84,7 +75,7 @@ object StreamingCluster {
   def updateState(vecsDf: DataFrame, m: Seq[(Long, Seq[Long])]): DataFrame = {
     val vsum = udaf(graft.functions.VecSumAgg)
     vecsDf
-      .filter(wellFormed(col("embedding")))
+      .filter(VectorFns.wellFormed(col("embedding")))
       .select(assignCol(col("embedding"), m).as("cid"),
         ClusterOps.quant(StreamingAnn.toDouble(col("embedding"))).as("qv"))
       .groupBy(col("cid"))

@@ -146,7 +146,7 @@ object StreamingThroughput {
         .collect().sortBy(_.doc_id).toSeq
     def decon(bloom: Array[Long])(ds: Dataset[DocIn]) =
       Seq(noop(StreamingDecon.flag(ds.toDF(), bloom)))
-    def ann(m: StreamingAnn.Model)(ds: Dataset[VecIn]) =
+    def ann(m: graft.functions.AnnModel)(ds: Dataset[VecIn]) =
       Seq(noop(StreamingAnn.ingest(
         StatefulOps.streamingExactDedup(
           ds.toDF().withColumn("ts", timestamp_seconds(col("vec_id") + 3600L)),
@@ -155,7 +155,7 @@ object StreamingThroughput {
     // incremental q180 index maintenance (foreachBatch ingest: in-row
     // encode + verified cid-partitioned file append + manifest commit
     // per micro-batch) — each feed grows its own fresh published tree
-    def annAppendT(m: StreamingAnn.Model, seedDir: String)(
+    def annAppendT(m: graft.functions.AnnModel, seedDir: String)(
         ds: Dataset[VecIn]) = {
       val (path, _, _) = graft.queries.SimilarityOps.writeAnnIndex(spark,
         graft.queries.SimilarityOps.annIndexLists(spark, seedDir).limit(0),

@@ -145,6 +145,26 @@ class BenchSpec extends AnyFunSuite {
     assert(file.contains("SQLSTATE: 42K09; line 1 pos 0"))
   }
 
+  test("184 queries keep two significant digits below 1 s in the tail window") {
+    // the r20 shape: at 184 queries the 1-decimal stage printed sub-50 ms
+    // queries as 0; the compact stages list query-number runs instead
+    val ts = (1 to 184).map(i => (f"q$i%02d_some_representative_query_name",
+      if (i % 10 == 0) 12.345678901
+      else if (i % 7 == 0) 0.0349
+      else if (i % 11 == 0) 0.021
+      else 0.423456789)).toVector
+    val st = (1 to 22).map(i => (s"staged_frame_$i", 3.21098765)).toVector
+    val amb = Bench.Ambient(Seq(7.42, 4.25, 3.0), Seq(3.84, 4.87, 3.98), 0.168, 0.1)
+    val (stdout, file) = Bench.render(ts, Map.empty, "sf0.1", st, Some(amb))
+    assert(stdout.length <= 1880, s"stdout line too long: ${stdout.length}")
+    val run = stdout.split("\"queries\":\\{\"01\":\\[")(1)
+      .takeWhile(_ != ']').split(",").toSeq
+    assert(run.length == 184, stdout)
+    assert(run(0) == "0.42" && run(6) == "0.035" && run(9) == "12.3" &&
+      run(10) == "0.021", run.take(12))
+    assert(file.contains("\"q07_some_representative_query_name\":0.0349"))
+  }
+
   test("stdout error messages are capped at class + ~80 chars; " +
     "file line keeps full text") {
     val msg = "x" * 500

@@ -23,6 +23,16 @@ trait SparkSpec extends AnyFunSuite {
     * turned on, move the conf-window tests onto `spark.newSession()`
     * (session-scoped runtime confs) instead of widening this helper.
     */
+  /** Runs `body` twice: generated code inside whole-stage codegen, then
+    * interpreted evaluation with codegen off.
+    */
+  protected def inBothCodegenModes(body: => Unit): Unit =
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN"))
+      withConfs("spark.sql.codegen.factoryMode" -> mode,
+        "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString) {
+        body
+      }
+
   protected def withConfs[A](kvs: (String, String)*)(body: => A): A = {
     val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -64,4 +64,34 @@ class ClusterOpsLoopSpec extends SparkSpec {
     assert(a == b)
     assert(b.map(_._4).sum == vecs.size.toLong)
   }
+
+  test("LatticeNearest breaks the fixture's tie to the smaller cid, " +
+    "interpreted and generated") {
+    // brute force over the fixture: (dist asc, cid asc)
+    def nearest(qv: Seq[Long]): (Long, Long) = cur.map { case (cid, cv) =>
+      (qv.zip(cv).map { case (a, b) => (a - b) * (a - b) }.sum, cid)
+    }.min
+    val want = vecs.zipWithIndex.map { case (qv, i) =>
+      i.toLong -> nearest(qv) }.toMap
+    assert(want(2L) == (16L, 0L)) // vec 2 is equidistant: smaller cid
+    inBothCodegenModes {
+      val got = frame
+        .select(col("vec_id"),
+          ClusterOps.nearestStruct(col("qvd"), col("qq"), cur).as("n"))
+        .collect().map(r => r.getLong(0) ->
+          (r.getStruct(1).getLong(0), r.getStruct(1).getLong(1))).toMap
+      assert(got == want)
+    }
+    // a null element has no lattice distance: null, never a cluster (the
+    // old sort put null distances first and the RDD path unboxed 0)
+    import spark.implicits._
+    val m = Seq(0L -> Seq.fill(64)(1024L), 3L -> Seq.fill(64)(2048L))
+    val qvd = Seq.tabulate[java.lang.Double](64)(i =>
+      if (i == 5) null else Double.box(1500.0))
+    val n = Seq(Tuple1(qvd)).toDF("qvd")
+      .select(ClusterOps.nearestStruct(col("qvd"),
+        graft.functions.VectorFns.dot(col("qvd"), col("qvd")), m))
+      .head()
+    assert(n.isNullAt(0))
+  }
 }

@@ -230,7 +230,7 @@ class DirtyEmbeddingsSpec extends SparkSpec {
     val out = StreamingAnn.ingest(
       spark.read.parquet(s"$dirtyDir/embeddings.parquet"), "vec_id", m)
       .collect().map(r => r.getLong(0) ->
-        ((0 until graft.queries.SimilarityOps.PqM)
+        ((0 until graft.functions.VectorModels.PqM)
           .forall(i => !r.isNullAt(r.fieldIndex(s"code_$i"))),
           !r.isNullAt(r.fieldIndex("cid")))).toMap
     assert(out.size == 11)

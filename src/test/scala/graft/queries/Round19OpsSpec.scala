@@ -138,8 +138,7 @@ class Round19OpsSpec extends SparkSpec {
       corpus.filter(col("vec_id") >= 200 && col("vec_id") < 220),
       "vec_id", model, path, batchId = 0L)
     assert(SimilarityOps.readAnnManifestFull(spark, path).modelFp
-      .contains(SimilarityOps.annModelFingerprint(model.centroids,
-        model.cb)))
+      .contains(model.fingerprint))
   }
 
   // ------------------------------------------------- run identity

@@ -83,11 +83,54 @@ class StreamingAnnSpec extends SparkSpec {
     val out = StreamingAnn.ingest(
       dirty.toDF("neighbor_id", "embedding"), "neighbor_id", m)
     val rows = out.collect().map(r => r.getLong(0) ->
-      (0 until graft.queries.SimilarityOps.PqM)
+      (0 until graft.functions.VectorModels.PqM)
         .forall(i => !r.isNullAt(r.fieldIndex(s"code_$i")))).toMap
     assert(rows.keySet == Set(9001L, 9002L, 9003L, 9004L))
     // only the well-formed vector earns codes; malformed ones carry null
     // codes, so their ADC is null and sorts behind every real candidate
     assert(rows(9004L) && !rows(9001L) && !rows(9002L) && !rows(9003L))
+  }
+
+  test("ingest routes like the coarseAssign window on the real corpus") {
+    val m = StreamingAnn.model(spark, sfDir)
+    val raw = graft.Tables(spark, sfDir, "embeddings")
+    def cids(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.select("vec_id", "cid").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = cids(graft.queries.SimilarityOps.coarseAssign(
+      raw.select(col("vec_id"), StreamingAnn.toDouble(col("embedding")).as("nv")),
+      raw.filter(col("vec_id") < 16).select(col("vec_id").as("cid"),
+        StreamingAnn.toDouble(col("embedding")).as("cv")),
+      "vec_id", "nv", keep = 1))
+    inBothCodegenModes {
+      val ing = StreamingAnn.ingest(
+          raw.withColumn("lab", col("label").cast("int")), "vec_id", m,
+          keepCols = Seq("lab"))
+        .select(col("vec_id").cast("long").as("vec_id") +:
+          (0 until graft.functions.VectorModels.PqM)
+            .map(i => col(s"code_$i")) :+ col("lab") :+ col("cid"): _*)
+      assert(want.nonEmpty && cids(ing) == want)
+      // codes: (rows, Σ pmod(xxhash64(row), 1e9+7)) of the literal-tree
+      // ingest the expressions replaced
+      val g = ing.agg(count(lit(1)),
+        sum(pmod(xxhash64(ing.columns.map(col): _*), lit(1000000007L)))).head()
+      assert((g.getLong(0), g.getLong(1)) == ((500L, 260671045388L)))
+    }
+  }
+
+  test("ingest plans by model fingerprint inside whole-stage codegen") {
+    val m = StreamingAnn.model(spark, sfDir)
+    val ing = StreamingAnn.ingest(
+      graft.Tables(spark, sfDir, "embeddings"), "vec_id", m)
+    val plan = ing.queryExecution.optimizedPlan.toString
+    assert(plan.length < 5000, plan)
+    assert(plan.contains(m.toString), plan)
+    // one encode per row: the eight codes read one pqencode value
+    assert("pqencode\\(".r.findAllMatchIn(plan).size == 1, plan)
+    ing.collect()
+    val lines = ing.queryExecution.executedPlan.toString.linesIterator.toSeq
+    for (fn <- Seq("annroute(", "pqencode("))
+      assert(lines.exists(l => l.contains("*(") && l.contains(fn)),
+        lines.mkString("\n"))
   }
 }

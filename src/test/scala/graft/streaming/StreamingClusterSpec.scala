@@ -13,6 +13,14 @@ import org.apache.spark.sql.functions._
   * rules. Malformed arrivals are excluded by the same well-formed rule
   * the batch lattice applies, never silently assigned.
   */
+/** A [[VecRow]] whose elements may be null. */
+final case class BoxedVecRow(vec_id: Long, embedding: Seq[java.lang.Float])
+
+object BoxedVecRow {
+  def apply(r: VecRow): BoxedVecRow = BoxedVecRow(r.vec_id,
+    Option(r.embedding).map(_.map(Float.box)).orNull)
+}
+
 class StreamingClusterSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -161,7 +169,7 @@ class StreamingClusterSpec extends SparkSpec {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // model trained on a tiny clean fixture; the stream then carries the
-    // clean rows PLUS null/empty/ragged arrivals
+    // clean rows PLUS null/empty/ragged/null-element arrivals
     val dim = graft.functions.VectorFns.Dims
     def vec(seed: Int): Seq[Float] =
       Seq.tabulate(dim)(i => ((seed * 31 + i * 7) % 13 - 6) / 6.0f)
@@ -171,13 +179,15 @@ class StreamingClusterSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     val m = StreamingCluster.model(spark, dir)
 
-    val in = MemoryStream[VecRow]
+    val in = MemoryStream[BoxedVecRow]
     val q = StreamingCluster.occupancy(in.toDF(), m)
       .writeStream.format("memory").queryName("cluster_occ_dirty")
       .outputMode("complete").start()
     try {
-      in.addData(clean :+ VecRow(4L, null) :+ VecRow(5L, Seq.empty[Float])
-        :+ VecRow(6L, Seq.tabulate(16)(_.toFloat)))
+      in.addData((clean :+ VecRow(4L, null) :+ VecRow(5L, Seq.empty[Float])
+          :+ VecRow(6L, Seq.tabulate(16)(_.toFloat))).map(BoxedVecRow(_))
+        // a null ELEMENT in an otherwise Dims-long vector
+        :+ BoxedVecRow(7L, vec(7).map(Float.box).updated(5, null)))
       q.processAllAvailable()
     } finally q.stop()
     val streamed = spark.table("cluster_occ_dirty")
