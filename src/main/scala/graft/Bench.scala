@@ -140,32 +140,15 @@ object Bench {
       if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
       else s
     def msT(v: Double): String = strip(ms(v))
-    def ms1(v: Double): String = strip(
-      BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toString)
-    // the compact stages' values: two significant digits below 1 s
-    // ("0.035", "0.42"), one decimal above — a fast query never reads 0
-    def sig2(v: Double): String =
-      if (v >= 1.0 || v <= 0.0) ms1(v)
-      else strip(BigDecimal(v).round(new java.math.MathContext(2,
+    // the last stages' values: one decimal from 0.1 s up, two significant
+    // digits below ("0.035"), so a fast query never reads 0. Two digits
+    // for every value below 1 s ("0.42") cost ~150 more chars at 184
+    // queries, more than the line has to spare.
+    def compact(v: Double): String = strip(
+      if (v >= 0.1 || v <= 0.0)
+        BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
+      else BigDecimal(v).round(new java.math.MathContext(2,
         java.math.RoundingMode.HALF_UP)).bigDecimal.toPlainString)
-    // At that precision one "key":value entry per query cannot fit the
-    // tail window at 184 queries (~1.9k chars of entries alone), so the
-    // compact stages list each run of consecutive query numbers once:
-    // "1":[0.6,0.17,...] reads q1, q2, ... in order. A non-numeric key is
-    // a run of one.
-    def runs(key: String => String, fmt: Double => String): String = {
-      val (num, other) = ts.map { case (k, v) => (key(k), v) }
-        .partition(e => e._1.nonEmpty && e._1.length < 9 && e._1.forall(_.isDigit))
-      val grouped = num.sortBy(_._1.toInt)
-        .foldLeft(List.empty[(String, Int, List[Double])]) {
-          case ((k0, last, vs) :: rest, (k, v)) if k.toInt == last + 1 =>
-            (k0, last + 1, v :: vs) :: rest
-          case (acc, (k, v)) => (k, k.toInt, List(v)) :: acc
-        }.reverse.map { case (k, _, vs) => k -> vs.reverse }
-      (grouped ++ other.map { case (k, v) => k -> List(v) })
-        .map { case (k, vs) => s""""${esc(k)}":${vs.map(fmt).mkString("[", ",", "]")}""" }
-        .mkString("{", ",", "}")
-    }
     // staging keys for the compressed stages: the globally-shortest
     // prefix length (>=3) that keeps every staged name unique; falls
     // back to full names when no prefix disambiguates
@@ -206,9 +189,8 @@ object Bench {
         if (i >= 0) v.take(i + 2) + v.drop(i + 2).take(msgCap) else v.take(msgCap)
       }
     def line(key: String => String, fmt: Double => String,
-        st: String, errCap: Int = Int.MaxValue, grouped: Boolean = false) = {
-      val qs = if (grouped) runs(key, fmt)
-        else ts.map { case (k, v) => s"\"" + key(k) + "\":" + fmt(v) }.mkString("{", ",", "}")
+        st: String, errCap: Int = Int.MaxValue) = {
+      val qs = ts.map { case (k, v) => s"\"" + key(k) + "\":" + fmt(v) }.mkString("{", ",", "}")
       val es = errs.map { case (k, v) =>
         s"\"${esc(key(k))}\":\"${esc(capErr(v, errCap))}\"" }.mkString("{", ",", "}")
       val amb = ambient.map { a =>
@@ -226,15 +208,14 @@ object Bench {
     // time. BENCH_r10's driver artifact recorded "staging":{} because the
     // old ladder DROPPED staging at 144 queries — the new ladder keeps
     // per-entry staging through every realistic stage (shortened names,
-    // then grouped query runs, then dropped error bodies) and only collapses
+    // then 1-decimal values, then dropped error bodies) and only collapses
     // to a {"_sum","_n"} total as a last resort, so amortized cost can
     // never again silently vanish from the artifact (round-10 directive
     // #3). Stages: (1) qNN keys, 2-dec, full staging names; (2) digit keys
     // ("q95" -> "95" — digits stay unique iff the qNN keys were); (3)
     // trailing-zero-stripped values + prefix-shortened staging names; (4)
-    // runs of consecutive query numbers with two-significant-digit values;
-    // (5) drop error message bodies, keep errored names; (6) staging
-    // collapsed to its sum + count. Overflow past stage 6 is
+    // compact values (one decimal, two significant digits below 0.1 s);
+    // (5) drop error message bodies, keep errored names; (6) staging collapsed to its sum + count. Overflow past stage 6 is
     // LOUD (stderr) instead of the driver silently truncating the tail.
     // LazyList memoizes: the overflow fallback reuses the last-stage
     // string the find already rendered instead of rendering it twice.
@@ -243,9 +224,9 @@ object Bench {
       () => line(shortKey, ms, stObj(identity, ms), errCap = 80),
       () => line(digitKey, ms, stObj(identity, ms), errCap = 80),
       () => line(digitKey, msT, stObj(stShortKey, msT), errCap = 80),
-      () => line(digitKey, sig2, stObj(stShortKey, sig2), 80, grouped = true),
-      () => line(digitKey, sig2, stObj(stShortKey, sig2), 0, grouped = true),
-      () => line(digitKey, sig2, stSum, errCap = 0, grouped = true)).map(_())
+      () => line(digitKey, compact, stObj(stShortKey, compact), errCap = 80),
+      () => line(digitKey, compact, stObj(stShortKey, compact), errCap = 0),
+      () => line(digitKey, compact, stSum, errCap = 0)).map(_())
     val stdoutLine = stages.find(_.length <= 1880)
       .getOrElse {
         val last = stages.last

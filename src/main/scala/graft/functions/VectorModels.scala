@@ -91,17 +91,16 @@ sealed abstract class VectorModel(tag: String) extends Serializable {
 }
 
 /** IVF-PQ model: coarse centroids (cid, vector), sorted by cid, plus the
-  * PQ codebook `cb(m)(k)` (an 8-dim codeword) and its norms `<cw, cw>`.
+  * PQ codebook `cb(m)(k)` (an 8-dim codeword).
   */
 final case class AnnModel(
     centroids: Seq[(Long, Seq[Double])],
-    cb: IndexedSeq[IndexedSeq[Seq[Double]]],
-    norms: IndexedSeq[IndexedSeq[Double]]) extends VectorModel("ann_model") {
+    cb: IndexedSeq[IndexedSeq[Seq[Double]]]) extends VectorModel("ann_model") {
   private val cids = centroids.map(_._1).toArray
   private val cents = centroids.map(_._2.toArray).toArray
   private val centNorms = cents.map(c => dot(c, 0, c, 0, c.length))
   private val cbA = cb.map(_.map(_.toArray).toArray).toArray
-  private val normsA = norms.map(_.toArray).toArray
+  private val normsA = cbA.map(_.map(cw => dot(cw, 0, cw, 0, cw.length)))
 
   /** FNV-1a over the raw double bits plus shape markers: the identity a
     * written index's manifest pins, since stored codes are only meaningful

@@ -54,8 +54,7 @@ object SimilarityOps {
 
   /** The IVF-PQ model (q128/q129) for (session, dir, nlist), memoized: the
     * first-nlist coarse centroids the batch `assign` broadcasts plus the
-    * PQ codebook (8 subspaces x 8 dims, 16 codewords each) and its
-    * left-fold norms <cw,cw>. Every encode, route and ADC site — q128's
+    * PQ codebook (8 subspaces x 8 dims, 16 codewords each). Every encode, route and ADC site — q128's
     * build, the streaming ingest twin, the serve paths — reads this one
     * model, so their codes and ADC are bit-identical by construction.
     *
@@ -82,8 +81,6 @@ object SimilarityOps {
         else valid(k % valid.length).toSeq
       val cb = (0 until PqM).map(m =>
         (0 until PqK).map(k => cw(k).slice(m * PqDim, (m + 1) * PqDim)))
-      // same left-fold order as VecDot / DuckDB list_dot_product(cs, cs)
-      val norms = cb.map(_.map(_.foldLeft(0.0)((acc, x) => acc + x * x)))
       // the model keeps EVERY vec_id < 16 candidate, malformed or not:
       // the batch window scores all of them, and a wrong-dim CORPUS
       // vector legitimately wins cosine 1 against its own wrong-dim twin
@@ -103,7 +100,7 @@ object SimilarityOps {
         .filter(col("vec_id") < annNlist(s))
         .collect().map(r => r.getLong(0) -> annCentroidVec(r, 1))
         .toSeq.sortBy(_._1)
-      AnnModel(cents, cb, norms)
+      AnnModel(cents, cb)
     })
 
   /** Adds `code_0..code_7` PQ codes ([[graft.functions.PqEncode]]) to a
@@ -2603,7 +2600,7 @@ object SimilarityOps {
         import graft.streaming.StreamingAnn
         val row = graft.Staging.stage(s, dir,
             annStageKey(s, "ann_index_compacted")) {
-          val m = StreamingAnn.model(s, dir)
+          val m = annModel(s, dir)
           val root = graft.Staging.artifactRoot(s, "graft_anncomp_")
           val (path, _, _) = writeAnnIndex(s,
             annIndexLists(s, dir).limit(0), root, annModelFp(s, dir))
@@ -2682,7 +2679,7 @@ object SimilarityOps {
         val fp = annModelFp(s, dir)
         val row = graft.Staging.stage(s, dir,
             annStageKey(s, "ann_index_tombstoned")) {
-          val m = StreamingAnn.model(s, dir)
+          val m = annModel(s, dir)
           val root = graft.Staging.artifactRoot(s, "graft_anntomb_")
           val (path, _, _) = writeAnnIndex(s,
             annIndexLists(s, dir).limit(0), root, fp)

@@ -196,7 +196,7 @@ object StreamDemo {
     // arriving vectors PQ-encoded and routed to IVF lists in-row (the
     // index grows as a stateless projection), then the query vectors
     // served per-micro-batch against the ingested index with q128's ADC.
-    val annM = StreamingAnn.model(spark, sfDir)
+    val annM = graft.queries.SimilarityOps.annModel(spark, sfDir)
     val annQ = StreamingAnn.ingest(
         graft.sources.Sources.fileStream(spark, sfDir, "embeddings")
           .filter($"vec_id" >= 5)

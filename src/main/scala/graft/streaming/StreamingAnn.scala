@@ -34,12 +34,6 @@ import graft.queries.SimilarityOps
   */
 object StreamingAnn {
 
-  /** The model bundle: coarse centroids + PQ codebook/norms, from the
-    * same memoized build as q128 (SimilarityOps.annModel).
-    */
-  def model(s: org.apache.spark.sql.SparkSession, dir: String): AnnModel =
-    SimilarityOps.annModel(s, dir)
-
   /** Float→double vector column (the Tables/vecs cast, usable on a
     * streamed frame with a raw `embedding` array<float> column) — an
     * array cast, so the projection stays in whole-stage codegen.

@@ -212,7 +212,8 @@ object StreamingThroughput {
     lazy val x10Vecs = vecsIn(s"$scaleRoot/x10")
     lazy val x1Mix = mixDocs(s"$scaleRoot/x1")
     lazy val x10Mix = mixDocs(s"$scaleRoot/x10")
-    lazy val annModel = StreamingAnn.model(spark, s"$scaleRoot/x1")
+    lazy val annModel =
+      graft.queries.SimilarityOps.annModel(spark, s"$scaleRoot/x1")
     lazy val clusterModel = StreamingCluster.model(spark, s"$scaleRoot/x1")
     lazy val x1Orders = orders(evX1)
     lazy val x10Orders = orders(evX10)

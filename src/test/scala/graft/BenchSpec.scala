@@ -145,9 +145,9 @@ class BenchSpec extends AnyFunSuite {
     assert(file.contains("SQLSTATE: 42K09; line 1 pos 0"))
   }
 
-  test("184 queries keep two significant digits below 1 s in the tail window") {
-    // the r20 shape: at 184 queries the 1-decimal stage printed sub-50 ms
-    // queries as 0; the compact stages list query-number runs instead
+  test("184 queries: one key per query and no fast query prints 0") {
+    // the r20 shape: at 184 queries the line falls to the last stage,
+    // whose 1-decimal values printed sub-50 ms queries as 0
     val ts = (1 to 184).map(i => (f"q$i%02d_some_representative_query_name",
       if (i % 10 == 0) 12.345678901
       else if (i % 7 == 0) 0.0349
@@ -156,12 +156,14 @@ class BenchSpec extends AnyFunSuite {
     val st = (1 to 22).map(i => (s"staged_frame_$i", 3.21098765)).toVector
     val amb = Bench.Ambient(Seq(7.42, 4.25, 3.0), Seq(3.84, 4.87, 3.98), 0.168, 0.1)
     val (stdout, file) = Bench.render(ts, Map.empty, "sf0.1", st, Some(amb))
-    assert(stdout.length <= 1880, s"stdout line too long: ${stdout.length}")
-    val run = stdout.split("\"queries\":\\{\"01\":\\[")(1)
-      .takeWhile(_ != ']').split(",").toSeq
-    assert(run.length == 184, stdout)
-    assert(run(0) == "0.42" && run(6) == "0.035" && run(9) == "12.3" &&
-      run(10) == "0.021", run.take(12))
+    assert(stdout.contains("\"staging\":{\"_sum\":"), stdout)
+    val qs = stdout.split("\"queries\":\\{")(1).takeWhile(_ != '}')
+      .split(",").map(_.split(":") match { case Array(k, v) => k -> v }).toMap
+    assert(qs.size == 184, stdout)
+    assert(qs("\"01\"") == "0.4" && qs("\"07\"") == "0.035" &&
+      qs("\"10\"") == "12.3" && qs("\"11\"") == "0.021" &&
+      qs("\"184\"") == "0.4", qs)
+    assert(!qs.values.exists(_.toDouble == 0.0), qs)
     assert(file.contains("\"q07_some_representative_query_name\":0.0349"))
   }
 

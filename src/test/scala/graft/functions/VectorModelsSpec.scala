@@ -92,7 +92,6 @@ class VectorModelsSpec extends SparkSpec {
 
   private val cb = (0 until 8).map(mIdx => (0 until 16).map(k =>
     (0 until 8).map(j => ((mIdx + k + j) % 4).toDouble))).toIndexedSeq
-  private val norms = cb.map(_.map(_.foldLeft(0.0)((a, x) => a + x * x)))
 
   // the literal-tree ingest's rows for the fixture: (neighbor_id,
   // code_0..7, lab, cid)
@@ -113,7 +112,7 @@ class VectorModelsSpec extends SparkSpec {
     val model = AnnModel(
       centroids = centDf.collect().map(r =>
         r.getLong(0) -> SimilarityOps.annCentroidVec(r, 1)).toSeq,
-      cb = cb, norms = norms)
+      cb = cb)
     assert(model.centroids.head == (1L -> Seq.empty[Double]))
     // the batch window's full rank order per vector (coarseAssign's
     // ORDER BY cdist DESC, cid), for the top-keep route
@@ -145,7 +144,7 @@ class VectorModelsSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(routes == ranked)
       // empty model: null cid, codes unchanged
-      val empty = AnnModel(Nil, cb, norms)
+      val empty = AnnModel(Nil, cb)
       assert(rows(viaIngest(df, empty)) ==
         FixtureGolden.map(r => r.init :+ null).toSet)
     }
@@ -182,10 +181,9 @@ class VectorModelsSpec extends SparkSpec {
         StructField("qv", ArrayType(DoubleType, containsNull = true)) +:
         (0 until 8).map(i => StructField(s"code_$i", IntegerType)))))
     val models = Map(
-      "empty model" -> AnnModel(Nil, cb, norms),
+      "empty model" -> AnnModel(Nil, cb),
       "zero codebook" -> AnnModel(Nil,
-        IndexedSeq.fill(8)(IndexedSeq.fill(16)(Seq.fill(8)(0.0))),
-        IndexedSeq.fill(8)(IndexedSeq.fill(16)(0.0))))
+        IndexedSeq.fill(8)(IndexedSeq.fill(16)(Seq.fill(8)(0.0)))))
     inBothCodegenModes {
       for ((name, m) <- models) {
         val got = qdf.select(col("id"), SimilarityOps.adcDistance("qv", m))

@@ -222,7 +222,7 @@ class DirtyEmbeddingsSpec extends SparkSpec {
     // from batch (the q183 dirty-lifecycle find); the null embedding
     // (vec 3) is carried as the EMPTY vector so it stays in the
     // tie-break set while scoring null in-row, exactly like batch
-    val m = StreamingAnn.model(spark, dirtyDir)
+    val m = SimilarityOps.annModel(spark, dirtyDir)
     assert(m.centroids.map(_._1) == (0L to 10L),
       s"model must keep every centroid candidate: ${m.centroids.map(_._1)}")
     assert(m.centroids.find(_._1 == 3L).exists(_._2.isEmpty),

@@ -64,7 +64,7 @@ class PartitionPruningSpec extends SparkSpec {
     import graft.streaming.StreamingAnn
     val sfDir = "/root/testdata/sf0.001"
     val dir = Files.createTempDirectory("ann_index").toString
-    val m = StreamingAnn.model(spark, sfDir)
+    val m = SimilarityOps.annModel(spark, sfDir)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
     // the at-scale storage StreamingAnn's scaladoc claims: index rows

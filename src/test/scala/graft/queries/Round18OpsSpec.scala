@@ -167,7 +167,7 @@ class Round18OpsSpec extends SparkSpec {
     "bit-unchanged and no list added or dropped, and a doctored " +
     "compacted tree still fails the gate") {
     import graft.streaming.StreamingAnn
-    val m = StreamingAnn.model(spark, sfDir)
+    val m = SimilarityOps.annModel(spark, sfDir)
     val root = graft.Staging.scratchDir("graft_comp_spec_")
     val (path, _, _) = SimilarityOps.writeAnnIndex(spark,
       SimilarityOps.annIndexLists(spark, sfDir).limit(0), root,

@@ -37,7 +37,7 @@ class Round19OpsSpec extends SparkSpec {
     path
   }
 
-  private lazy val model = StreamingAnn.model(spark, sfDir)
+  private lazy val model = SimilarityOps.annModel(spark, sfDir)
 
   // ------------------------------------------- single-writer enforcement
 

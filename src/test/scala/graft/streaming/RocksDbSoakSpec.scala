@@ -169,7 +169,8 @@ class RocksDbSoakSpec extends SparkSpec {
     "matches default on a 1.2k-vector soak with re-sends") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val m = StreamingAnn.model(spark, "/root/testdata/sf0.001")
+    val m = graft.queries.SimilarityOps.annModel(spark,
+      "/root/testdata/sf0.001")
     def vec(i: Long): VecRow =
       VecRow(i, Seq.tabulate(64)(d => (((i * 31 + d * 7) % 13) - 6).toFloat))
     val base = (0L until 1200L).map(vec).grouped(300).map(_.toSeq).toSeq

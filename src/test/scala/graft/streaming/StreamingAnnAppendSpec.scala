@@ -31,7 +31,7 @@ class StreamingAnnAppendSpec extends SparkSpec {
     "serving from it equals batch q180") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val m = StreamingAnn.model(spark, sfDir)
+    val m = SimilarityOps.annModel(spark, sfDir)
     val full = SimilarityOps.annIndexLists(spark, sfDir)
 
     // day 0: a partial index published by the batch writer
@@ -154,7 +154,7 @@ class StreamingAnnAppendSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     val idx = new Path(indexPath)
     val fs = idx.getFileSystem(conf)
-    val m = StreamingAnn.model(spark, sfDir)
+    val m = SimilarityOps.annModel(spark, sfDir)
     val nextId = SimilarityOps.readAnnLastBatch(spark, indexPath) + 1
     // simulate the crash: a prior attempt at batch `nextId` moved one
     // file into a list dir and died before the manifest commit
@@ -217,7 +217,7 @@ class StreamingAnnAppendSpec extends SparkSpec {
   test("verifyStaged = false appends commit the same write-side stats " +
     "and the tree still passes the batched full-tree verify (round-20)") {
     import spark.implicits._
-    val m = StreamingAnn.model(spark, sfDir)
+    val m = SimilarityOps.annModel(spark, sfDir)
     val full = SimilarityOps.annIndexLists(spark, sfDir)
     // two fresh trees from the same seed, one appended with per-batch
     // read-back verifies, one without: the manifests must be identical

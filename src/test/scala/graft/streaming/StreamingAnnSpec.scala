@@ -19,7 +19,7 @@ class StreamingAnnSpec extends SparkSpec {
 
   test("streamed ingest + per-batch serving equals batch q128 exactly") {
     import spark.implicits._
-    val m = StreamingAnn.model(spark, sfDir)
+    val m = graft.queries.SimilarityOps.annModel(spark, sfDir)
     val emb = graft.Tables(spark, sfDir, "embeddings")
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -74,7 +74,7 @@ class StreamingAnnSpec extends SparkSpec {
 
   test("malformed arriving vectors route without crashing and never rank") {
     import spark.implicits._
-    val m = StreamingAnn.model(spark, sfDir)
+    val m = graft.queries.SimilarityOps.annModel(spark, sfDir)
     val dirty = Seq(
       VecRow(9001L, null),
       VecRow(9002L, Seq.empty[Float]),
@@ -92,7 +92,7 @@ class StreamingAnnSpec extends SparkSpec {
   }
 
   test("ingest routes like the coarseAssign window on the real corpus") {
-    val m = StreamingAnn.model(spark, sfDir)
+    val m = graft.queries.SimilarityOps.annModel(spark, sfDir)
     val raw = graft.Tables(spark, sfDir, "embeddings")
     def cids(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.select("vec_id", "cid").collect()
@@ -119,7 +119,7 @@ class StreamingAnnSpec extends SparkSpec {
   }
 
   test("ingest plans by model fingerprint inside whole-stage codegen") {
-    val m = StreamingAnn.model(spark, sfDir)
+    val m = graft.queries.SimilarityOps.annModel(spark, sfDir)
     val ing = StreamingAnn.ingest(
       graft.Tables(spark, sfDir, "embeddings"), "vec_id", m)
     val plan = ing.queryExecution.optimizedPlan.toString
