@@ -25,18 +25,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def tokenizeExpr(args: Seq[Expression]): Expression =
-    StaticInvoke(
-      graft.functions.TokenizeCodegenEntry.getClass,
-      ArrayType(StringType),
-      "analyzeUtf8",
-      args,
-      Seq(StringType))
-
   val tokenizeDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("tokenize"),
     new ExpressionInfo(classOf[GraftExtensions].getName, "tokenize"),
-    tokenizeExpr)
+    graft.functions.Tokenize.tokenizeExpr)
 
   private def chunkFingerprintsExpr(args: Seq[Expression]): Expression =
     StaticInvoke(

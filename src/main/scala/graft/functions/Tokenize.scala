@@ -1,7 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** X1/X2 — the reference's only UDF surface: `ik_analyze`, an IK-segmenter
   * table function emitting one row per token (ref
@@ -56,19 +60,20 @@ object Tokenize {
     (c: Column) => u(c)
   }
 
-  /** Codegen form: a `StaticInvoke` Catalyst expression calling
+  /** The one codegen tokenizer expression: a `StaticInvoke` calling
     * [[TokenizeCodegenEntry.analyzeUtf8]] directly on internal UTF8String
-    * data — no closure serialization or Row conversion per record.
+    * data — no closure serialization or Row conversion per record. Both
+    * [[tokenizeNative]] and the SQL `tokenize` function build it here.
     */
-  def tokenizeNative(c: Column): Column = {
-    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-    import org.apache.spark.sql.graft.ColumnBridge
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    ColumnBridge.column(StaticInvoke(
+  private[graft] def tokenizeExpr(args: Seq[Expression]): Expression =
+    StaticInvoke(
       TokenizeCodegenEntry.getClass,
       ArrayType(StringType),
       "analyzeUtf8",
-      Seq(ColumnBridge.expression(c)),
-      Seq(StringType)))
-  }
+      args,
+      Seq(StringType))
+
+  /** Codegen form: [[tokenizeExpr]] over a column. */
+  def tokenizeNative(c: Column): Column =
+    ColumnBridge.column(tokenizeExpr(Seq(ColumnBridge.expression(c))))
 }

@@ -2690,10 +2690,13 @@ object SimilarityOps {
             .filter(col("vec_id") >= 5)
           // verifyStaged = false: per-batch read-back verifies batched
           // into the downstream full-tree gates (round-20, same as
-          // q183) — here BOTH the serve admission live-count check
-          // (before `pre`) and the compaction rows+checksum gate run
-          // over the whole tree against the manifest before the result
-          // leaves the build.
+          // q183). The serve-admission gate before `pre` checks only the
+          // LIVE ROW COUNT against the manifest, so the `pre` tombstone
+          // assertion below can run over same-count drifted rows of an
+          // unverified append; that window is tolerated because the
+          // compaction rows+checksum gate recomputes the whole tree
+          // against the manifest and still fails the query before the
+          // result leaves the build.
           for (slice <- 0 until 4)
             StreamingAnn.appendBatch(
               in.filter(pmod(col("vec_id"), lit(4)) === slice),

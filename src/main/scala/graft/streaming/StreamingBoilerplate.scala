@@ -1,11 +1,7 @@
 package graft.streaming
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incremental boilerplate removal — batch q173's streaming twin: as
@@ -49,8 +45,8 @@ import org.apache.spark.sql.types._
   * and keep all their tokens; null-text docs have zero paras and zero
   * tokens.
   *
-  * Guards (fail-loud): the StreamingMixture fingerprinted replay
-  * discipline verbatim (whole-batch re-delivery skips, id reuse refuses),
+  * Guards (fail-loud): the fingerprinted replay guard
+  * [[StateFrames.admit]] (whole-batch re-delivery skips, id reuse refuses),
   * duplicate holder versions for one (ck, doc) (a corrupt store would
   * double-retract silently), and non-negative tokens_kept after
   * retraction.
@@ -71,7 +67,7 @@ object StreamingBoilerplate {
 
   /** Mutable per-stream state; one instance per logical ingest pipeline. */
   final class BoilerplateState(spark: SparkSession,
-      private[streaming] val compactAt: Int = 32) {
+      private[streaming] val compactAt: Int = 32) extends IncrementalState {
 
     private val chunksSchema = StructType(Seq(
       StructField("ck", StringType), StructField("seq", LongType),
@@ -87,20 +83,12 @@ object StreamingBoilerplate {
       StructField("n_boiler_paras", LongType),
       StructField("tokens_kept", LongType)))
 
-    private def latestBy(keys: String*)(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(
-          Window.partitionBy(keys.map(col): _*).orderBy(col("seq").desc)))
-        .filter(col("rn") === 1).drop("rn")
-
-    private val chunkStore =
-      new StateFrames.SegmentedStore(spark, chunksSchema, compactAt,
-        latestBy("ck"))
-    private val holderStore =
-      new StateFrames.SegmentedStore(spark, holdersSchema, compactAt,
-        latestBy("ck", "doc_id"))
-    private val countStore =
-      new StateFrames.SegmentedStore(spark, countsSchema, compactAt,
-        latestBy("doc_id"))
+    private val chunkStore = new StateFrames.SegmentedStore(spark,
+      chunksSchema, compactAt, latestBy = Seq("ck"))
+    private val holderStore = new StateFrames.SegmentedStore(spark,
+      holdersSchema, compactAt, latestBy = Seq("ck", "doc_id"))
+    private val countStore = new StateFrames.SegmentedStore(spark,
+      countsSchema, compactAt, latestBy = Seq("doc_id"))
 
     private var seq = 0L
 
@@ -110,30 +98,16 @@ object StreamingBoilerplate {
 
     private[streaming] def loadFrom(chunks: DataFrame, holders: DataFrame,
         counts: DataFrame): Unit = this.synchronized {
-      chunkStore.reset(chunks.select(col("ck"), col("seq"), col("df")))
-      holderStore.reset(holders.select(col("ck"), col("doc_id"), col("seq"),
-        col("n_occ"), col("sz_sum")))
-      countStore.reset(counts.select(col("doc_id"), col("seq"), col("fp"),
-        col("source"), col("n_tokens"), col("n_paras"),
-        col("n_boiler_paras"), col("tokens_kept")))
-      val m = countStore.frame.agg(max(col("seq"))).head()
-      seq = if (m.isNullAt(0)) 0L else m.getLong(0)
+      chunkStore.reset(chunks)
+      holderStore.reset(holders)
+      countStore.reset(counts)
+      seq = countStore.maxSeq
     }
-
-    private def release(df: DataFrame): Unit =
-      graft.operators.ConnectedComponents.releaseBlocks(df)
 
     /** Ingest one batch of (doc_id, source, text) rows (extra columns
       * ignored); all-or-nothing like the family's other ingests.
       */
-    def ingest(batch: DataFrame): Unit = {
-      val temps = mutable.ListBuffer.empty[DataFrame]
-      def temp(df: DataFrame): DataFrame = { temps += df; df }
-      try ingestTracked(batch, temp)
-      finally temps.foreach(release)
-    }
-
-    private def ingestTracked(batch: DataFrame,
+    protected def ingestWith(batch: DataFrame,
         temp: DataFrame => DataFrame): Unit = {
       // null-safe replay fingerprint (the StreamingExport rule: null
       // source/text fingerprint deterministically, never to SQL null)
@@ -145,41 +119,10 @@ object StreamingBoilerplate {
           coalesce(col("source"), lit("<null-source>")),
           coalesce(col("text"), lit("<null-text>")))))
         .withColumn("n_tokens",
-          coalesce(size(tokens(col("text"))), lit(0)).cast("long"))
-        .localCheckpoint(true))
+          coalesce(size(tokens(col("text"))), lit(0)).cast("long")))
 
-      // the four-way replay/reuse decision (StreamingMixture verbatim)
-      val idStats = newDocs
-        .join(latestBy("doc_id")(countStore.frame
-            .join(newDocs.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-            .select(col("doc_id"), lit(1).as("seen"),
-              col("fp").as("seen_fp")),
-          Seq("doc_id"), "left_outer")
-        .agg(count(lit(1)).as("n"), count_distinct(col("doc_id")).as("nd"),
-          sum(coalesce(col("seen"), lit(0))).as("replayed"),
-          sum(when(col("seen_fp") === col("fp"), 1L).otherwise(0L))
-            .as("matched"))
-        .head()
-      val nNew = idStats.getLong(0)
-      if (nNew != idStats.getLong(1)) throw new IllegalStateException(
-        s"StreamingBoilerplate: batch carries ${nNew - idStats.getLong(1)} " +
-          "duplicate doc_id rows — refusing to double-count paragraphs")
-      if (nNew == 0L) return
-      val nReplayed = idStats.getLong(2)
-      val nMatched = idStats.getLong(3)
-      if (nReplayed == nNew && nMatched == nNew) {
-        System.err.println(s"[graft] StreamingBoilerplate: all $nNew " +
-          "doc_ids already ingested with matching fingerprints — " +
-          "idempotent replay skip")
-        return
-      }
-      if (nReplayed == nNew) throw new IllegalStateException(
-        s"StreamingBoilerplate: all $nNew doc_ids already ingested but " +
-          s"${nNew - nMatched} fingerprints differ — doc_id reuse, " +
-          "refusing to corrupt the accounting")
-      if (nReplayed > 0L) throw new IllegalStateException(
-        s"StreamingBoilerplate: $nReplayed of $nNew doc_ids already " +
-          "ingested — partial overlap is doc_id reuse, refusing")
+      if (StateFrames.admit("StreamingBoilerplate", newDocs,
+          countStore.latestOf(newDocs.select(col("doc_id")))) == 0L) return
 
       // EXACTLY q173's chunk space: 20-token paragraphs of the
       // whitespace tokenization, h = md5(chunk), sz = tokens in chunk.
@@ -194,8 +137,7 @@ object StreamingBoilerplate {
               "AS h, least(20, size(t) - i * 20) AS sz))"))
           .as(Seq("para_idx", "c")))
         .select(col("doc_id"), col("source"), col("c.h").as("h"),
-          col("c.sz").cast("long").as("sz"))
-        .localCheckpoint(true))
+          col("c.sz").cast("long").as("sz")))
 
       val perDocParas = chunks.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_paras"))
@@ -206,36 +148,30 @@ object StreamingBoilerplate {
         .select(concat_ws("", col("source"), col("h")).as("ck"),
           col("doc_id"), col("sz"))
         .groupBy(col("ck"), col("doc_id"))
-        .agg(count(lit(1)).as("n_occ"), sum(col("sz")).as("sz_sum"))
-        .localCheckpoint(true))
+        .agg(count(lit(1)).as("n_occ"), sum(col("sz")).as("sz_sum")))
 
       // per-chunk df delta and the stored df (pruned keyed fetch)
       val batchDf = occ.groupBy(col("ck"))
         .agg(count(lit(1)).as("batch_df"))
-      val storedPruned = temp(chunkStore.frame
-        .join(batchDf.select(col("ck")), Seq("ck"), "left_semi")
-        .localCheckpoint(true))
+      val storedPruned = temp(chunkStore.touching(batchDf.select(col("ck"))))
       val dupChunks = storedPruned.groupBy(col("ck"), col("seq"))
         .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
       if (dupChunks > 0) throw new IllegalStateException(
         s"StreamingBoilerplate: $dupChunks (ck, seq) pairs carry " +
           "duplicate chunk rows — the chunk store is corrupt, refusing")
       val merged = temp(batchDf
-        .join(latestBy("ck")(storedPruned).select(col("ck"),
+        .join(chunkStore.keepLatest(storedPruned).select(col("ck"),
           col("df").as("old_df")), Seq("ck"), "left_outer")
         .select(col("ck"), col("batch_df"),
           coalesce(col("old_df"), lit(0L)).as("old_df"))
-        .withColumn("new_df", col("old_df") + col("batch_df"))
-        .localCheckpoint(true))
+        .withColumn("new_df", col("old_df") + col("batch_df")))
 
       // flips: under threshold before, at-or-over after — retract ALL
       // stored holders of exactly these chunks
       val flipped = merged
         .filter(col("old_df") < MinDf && col("new_df") >= MinDf)
         .select(col("ck"))
-      val heldPruned = temp(holderStore.frame
-        .join(flipped, Seq("ck"), "left_semi")
-        .localCheckpoint(true))
+      val heldPruned = temp(holderStore.touching(flipped))
       val dupHolders = heldPruned.groupBy(col("ck"), col("doc_id"),
           col("seq"))
         .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
@@ -243,7 +179,7 @@ object StreamingBoilerplate {
         s"StreamingBoilerplate: $dupHolders (ck, doc, seq) triples carry " +
           "duplicate holder rows — the holder store is corrupt, refusing " +
           "to double-retract")
-      val losses = latestBy("ck", "doc_id")(heldPruned)
+      val losses = holderStore.keepLatest(heldPruned)
         .groupBy(col("doc_id"))
         .agg(sum(col("n_occ")).as("d_boiler"),
           sum(col("sz_sum")).as("d_kept"))
@@ -270,63 +206,46 @@ object StreamingBoilerplate {
 
       // touched stored docs: re-emit with the flipped chunks' tokens
       // retracted
-      val touched = temp(latestBy("doc_id")(countStore.frame
-          .join(losses.select(col("doc_id")), Seq("doc_id"), "left_semi"))
+      val touched = temp(countStore.latestOf(losses.select(col("doc_id")))
         .join(losses, Seq("doc_id"))
         .select(col("doc_id"), lit(seq + 1).as("seq"), col("fp"),
           col("source"), col("n_tokens"), col("n_paras"),
           (col("n_boiler_paras") + col("d_boiler")).as("n_boiler_paras"),
-          (col("tokens_kept") - col("d_kept")).as("tokens_kept"))
-        .localCheckpoint(true))
+          (col("tokens_kept") - col("d_kept")).as("tokens_kept")))
       val bad = touched.filter(col("tokens_kept") < 0).count()
       if (bad > 0) throw new IllegalStateException(
         s"StreamingBoilerplate: $bad docs would go NEGATIVE tokens_kept " +
           "after retraction — accounting corrupt, refusing")
 
-      val countRows = temp(newRows.unionByName(touched)
-        .localCheckpoint(true))
+      val countRows = temp(newRows.unionByName(touched))
       val chunkRows = temp(merged
         .select(col("ck"), lit(seq + 1).as("seq"),
-          col("new_df").as("df"))
-        .localCheckpoint(true))
+          col("new_df").as("df")))
       // holders: only under-threshold chunks remember their occurrences
       val holderRows = temp(occ
         .join(merged.filter(col("new_df") < MinDf).select(col("ck")),
           Seq("ck"), "left_semi")
         .select(col("ck"), col("doc_id"), lit(seq + 1).as("seq"),
-          col("n_occ"), col("sz_sum"))
-        .localCheckpoint(true))
+          col("n_occ"), col("sz_sum")))
 
       // all fallible work done; segments materialize, then driver commit
-      val ckSeg = chunkStore.prepare(chunkRows)
-      val hSeg = try holderStore.prepare(holderRows) catch {
-        case t: Throwable =>
-          ckSeg._2.unpersist(blocking = false); throw t
-      }
-      val cSeg = try countStore.prepare(countRows) catch {
-        case t: Throwable =>
-          ckSeg._2.unpersist(blocking = false)
-          hSeg._2.unpersist(blocking = false); throw t
-      }
+      val prepared = StateFrames.prepareAll(Seq(chunkStore -> chunkRows,
+        holderStore -> holderRows, countStore -> countRows))
       this.synchronized {
         seq += 1
-        chunkStore.commit(ckSeg)
-        holderStore.commit(hSeg)
-        countStore.commit(cSeg)
+        StateFrames.commitAll(prepared)
       }
     }
 
     /** The current per-doc accounting — batch q173's exact schema and
       * values over everything ingested so far.
       */
-    def snapshot(): DataFrame = {
-      val frame = this.synchronized(countStore.frame)
-      latestBy("doc_id")(frame)
+    def snapshot(): DataFrame =
+      this.synchronized(countStore.latest)
         .select(col("doc_id"), col("source"), col("n_tokens"),
           col("n_paras"), col("n_boiler_paras"), col("tokens_kept"),
           expr("tokens_kept * 1000000L div greatest(n_tokens, 1L)")
             .as("kept_ppm"))
-    }
   }
 
   def state(spark: SparkSession): BoilerplateState =
@@ -339,12 +258,4 @@ object StreamingBoilerplate {
     st.loadFrom(chunks, holders, counts)
     st
   }
-
-  /** Wire a streaming (doc_id, source, text) frame into `st`. */
-  def attach(docs: DataFrame, st: BoilerplateState): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        st.ingest(b.toDF()))
-      .start()
 }

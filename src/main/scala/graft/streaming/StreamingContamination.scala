@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incremental cross-source contamination matrix — the streaming twin of
@@ -69,7 +68,7 @@ object StreamingContamination {
 
   /** Mutable per-stream state; one instance per logical monitor. */
   final class ContamState(spark: SparkSession,
-      private[streaming] val compactAt: Int = 32) {
+      private[streaming] val compactAt: Int = 32) extends IncrementalState {
 
     private val indexSchema = StructType(Seq(
       StructField("source", StringType), StructField("ng", LongType)))
@@ -94,7 +93,7 @@ object StreamingContamination {
 
     private[streaming] def loadFrom(indexStore: DataFrame): Unit =
       this.synchronized {
-        store.reset(indexStore.select(col("source"), col("ng")))
+        store.reset(indexStore)
         nGrams.clear(); shared.clear()
         // restart-time recompute of both driver maps from the index: a
         // groupBy plus the q148-core self-join — restart-time cost,
@@ -114,67 +113,61 @@ object StreamingContamination {
     /** Ingest one batch of (source, text) rows (extra columns ignored;
       * null sources excluded, exactly as batch q148 excludes them).
       */
-    def ingest(batch: DataFrame): Unit = {
-      val temps = mutable.ListBuffer.empty[DataFrame]
-      def temp(df: DataFrame): DataFrame = { temps += df; df }
-      try {
-        // batch → distinct (source, gram-hash): q148's gram space exactly
-        // (whitespace tokens, 5-gram, xxhash64)
-        val sg = batch
-          .filter(col("source").isNotNull)
-          .select(col("source"),
-            explode(array_distinct(wordNgrams(tokens(col("text")), 5)))
-              .as("gram"))
-          .select(col("source"), xxhash64(col("gram")).as("ng"))
-          .distinct()
-        // novelty filter: the replay-idempotence point — a (source, gram)
-        // already indexed contributes nothing downstream
-        val novel = temp(sg
-          .join(index, Seq("source", "ng"), "left_anti")
-          .localCheckpoint(true))
-        if (novel.isEmpty) return
+    protected def ingestWith(batch: DataFrame,
+        temp: DataFrame => DataFrame): Unit = {
+      // batch → distinct (source, gram-hash): q148's gram space exactly
+      // (whitespace tokens, 5-gram, xxhash64)
+      val sg = batch
+        .filter(col("source").isNotNull)
+        .select(col("source"),
+          explode(array_distinct(wordNgrams(tokens(col("text")), 5)))
+            .as("gram"))
+        .select(col("source"), xxhash64(col("gram")).as("ng"))
+        .distinct()
+      // novelty filter: the replay-idempotence point — a (source, gram)
+      // already indexed contributes nothing downstream
+      val novel = temp(sg.join(index, Seq("source", "ng"), "left_anti"))
+      if (novel.isEmpty) return
 
-        // cross pairs: a novel (s, g) meets every OTHER source already
-        // holding g (left_semi prune to touched grams = the keyed fetch a
-        // deployment does); novel-novel pairs cover both-arrive-together.
-        // Collected rows are ≤|sources|² — driver-bounded by contract.
-        val stored = index
-          .join(novel.select(col("ng")).distinct(), Seq("ng"), "left_semi")
-        val crossRows = novel.as("a")
-          .join(stored.as("b"), col("a.ng") === col("b.ng")
-            && col("a.source") =!= col("b.source"))
-          .select(least(col("a.source"), col("b.source")).as("sa"),
-            greatest(col("a.source"), col("b.source")).as("sb"))
-          .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("c"))
-          .collect()
-        val togetherRows = novel.as("a")
-          .join(novel.as("b"), col("a.ng") === col("b.ng")
-            && col("a.source") < col("b.source"))
-          .select(col("a.source").as("sa"), col("b.source").as("sb"))
-          .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("c"))
-          .collect()
-        val novelN = novel.groupBy(col("source"))
-          .agg(count(lit(1)).as("n")).collect()
+      // cross pairs: a novel (s, g) meets every OTHER source already
+      // holding g (left_semi prune to touched grams = the keyed fetch a
+      // deployment does); novel-novel pairs cover both-arrive-together.
+      // Collected rows are ≤|sources|² — driver-bounded by contract.
+      val stored = store.touching(novel.select(col("ng")).distinct())
+      val crossRows = novel.as("a")
+        .join(stored.as("b"), col("a.ng") === col("b.ng")
+          && col("a.source") =!= col("b.source"))
+        .select(least(col("a.source"), col("b.source")).as("sa"),
+          greatest(col("a.source"), col("b.source")).as("sb"))
+        .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("c"))
+        .collect()
+      val togetherRows = novel.as("a")
+        .join(novel.as("b"), col("a.ng") === col("b.ng")
+          && col("a.source") < col("b.source"))
+        .select(col("a.source").as("sa"), col("b.source").as("sb"))
+        .groupBy(col("sa"), col("sb")).agg(count(lit(1)).as("c"))
+        .collect()
+      val novelN = novel.groupBy(col("source"))
+        .agg(count(lit(1)).as("n")).collect()
 
-        // all fallible cluster work is done (the three collects above and
-        // the segment materialization below run BEFORE any driver map
-        // mutates — same all-or-nothing commit discipline as
-        // StreamingMixture.ingest)
-        val seg = store.prepare(novel.select(col("source"), col("ng")))
+      // all fallible cluster work is done (the three collects above and
+      // the segment materialization below run BEFORE any driver map
+      // mutates — same all-or-nothing commit discipline as
+      // StreamingMixture.ingest)
+      val seg = store.prepare(novel.select(col("source"), col("ng")))
 
-        // commit point: pure driver-side bookkeeping, synchronized so a
-        // concurrent matrix() poll never reads between the gram-count
-        // and pair-count updates
-        this.synchronized {
-          novelN.foreach(r => nGrams(r.getString(0)) =
-            nGrams.getOrElse(r.getString(0), 0L) + r.getLong(1))
-          (crossRows ++ togetherRows).foreach { r =>
-            val k = (r.getString(0), r.getString(1))
-            shared(k) = shared.getOrElse(k, 0L) + r.getLong(2)
-          }
-          store.commit(seg)
+      // commit point: pure driver-side bookkeeping, synchronized so a
+      // concurrent matrix() poll never reads between the gram-count
+      // and pair-count updates
+      this.synchronized {
+        novelN.foreach(r => nGrams(r.getString(0)) =
+          nGrams.getOrElse(r.getString(0), 0L) + r.getLong(1))
+        (crossRows ++ togetherRows).foreach { r =>
+          val k = (r.getString(0), r.getString(1))
+          shared(k) = shared.getOrElse(k, 0L) + r.getLong(2)
         }
-      } finally temps.foreach(StateFrames.release)
+        store.commit(seg)
+      }
     }
 
     private val matrixSchema = StructType(Seq(
@@ -213,15 +206,4 @@ object StreamingContamination {
     st.loadFrom(indexStore)
     st
   }
-
-  /** Wire a streaming (source, text) frame into `st` — one foreachBatch
-    * ingest per micro-batch (replay-idempotent, so at-least-once delivery
-    * is effectively-once with no extra machinery).
-    */
-  def attach(docs: DataFrame, st: ContamState): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        st.ingest(b.toDF()))
-      .start()
 }

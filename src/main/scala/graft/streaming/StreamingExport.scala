@@ -1,11 +1,7 @@
 package graft.streaming
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incremental training-export manifest — batch q156's streaming twin:
@@ -52,7 +48,7 @@ import org.apache.spark.sql.types._
   * recipe): canonical flips only true→false on stored docs,
   * contamination only false→true, removed tokens only nondecreasing —
   * all three checked per batch before the commit point; plus the
-  * family's fingerprinted replay discipline verbatim (whole-batch
+  * fingerprinted replay guard [[StateFrames.admit]] (whole-batch
   * re-delivery with matching fingerprints skips; id reuse under new
   * content or partial overlap fails loud).
   *
@@ -82,7 +78,7 @@ object StreamingExport {
 
   /** Mutable per-stream state; one instance per logical ingest pipeline. */
   final class ExportState(spark: SparkSession,
-      private[streaming] val compactAt: Int = 32) {
+      private[streaming] val compactAt: Int = 32) extends IncrementalState {
 
     private val docsSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("seq", LongType),
@@ -104,26 +100,18 @@ object StreamingExport {
       StructField("ng", LongType), StructField("seq", LongType),
       StructField("hdoc", LongType), StructField("hpos", IntegerType)))
 
-    private def latestBy(key: String)(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(
-          Window.partitionBy(col(key)).orderBy(col("seq").desc)))
-        .filter(col("rn") === 1).drop("rn")
-
-    private val docStore =
-      new StateFrames.SegmentedStore(spark, docsSchema, compactAt,
-        latestBy("doc_id"))
-    private val fpStore =
-      new StateFrames.SegmentedStore(spark, fpsSchema, compactAt,
-        latestBy("nfp"))
+    private val docStore = new StateFrames.SegmentedStore(spark,
+      docsSchema, compactAt, latestBy = Seq("doc_id"))
+    private val fpStore = new StateFrames.SegmentedStore(spark,
+      fpsSchema, compactAt, latestBy = Seq("nfp"))
     private val benchStore =
       new StateFrames.SegmentedStore(spark, benchSchema, compactAt)
     private val cg5Store =
       new StateFrames.SegmentedStore(spark, cg5Schema, compactAt)
     private val g10Store =
       new StateFrames.SegmentedStore(spark, g10Schema, compactAt)
-    private val holdStore =
-      new StateFrames.SegmentedStore(spark, holdSchema, compactAt,
-        latestBy("ng"))
+    private val holdStore = new StateFrames.SegmentedStore(spark,
+      holdSchema, compactAt, latestBy = Seq("ng"))
 
     private var seq = 0L
 
@@ -131,6 +119,7 @@ object StreamingExport {
       * [[StreamingExport.restore]] rebuilds from.
       */
     private[streaming] def docsFrame: DataFrame = docStore.frame
+    private[streaming] def latestDocs: DataFrame = docStore.latest
     private[streaming] def fpsFrame: DataFrame = fpStore.frame
     private[streaming] def benchFrame: DataFrame = benchStore.frame
     private[streaming] def cg5Frame: DataFrame = cg5Store.frame
@@ -140,41 +129,21 @@ object StreamingExport {
     private[streaming] def loadFrom(docs: DataFrame, fps: DataFrame,
         bench: DataFrame, cg5: DataFrame, g10: DataFrame,
         hold: DataFrame): Unit = this.synchronized {
-      docStore.reset(docs.select(col("doc_id"), col("seq"), col("fp"),
-        col("source"), col("n_tokens"), col("canonical"),
-        col("contaminated"), col("removed")))
-      fpStore.reset(fps.select(
-        coalesce(col("nfp"), lit("<null-text>")).as("nfp"),
-        col("seq"), col("holder")))
-      benchStore.reset(bench.select(col("ng")))
-      cg5Store.reset(cg5.select(col("ng"), col("doc_id")))
-      g10Store.reset(g10
-        .select(col("doc_id"), col("pos").cast("int"), col("ng")))
-      holdStore.reset(hold.select(col("ng"), col("seq"), col("hdoc"),
-        col("hpos").cast("int")))
-      val m = docStore.frame.agg(max(col("seq"))).head()
-      seq = if (m.isNullAt(0)) 0L else m.getLong(0)
+      docStore.reset(docs)
+      fpStore.reset(fps.withColumn("nfp",
+        coalesce(col("nfp"), lit("<null-text>"))))
+      benchStore.reset(bench)
+      cg5Store.reset(cg5)
+      g10Store.reset(g10)
+      holdStore.reset(hold)
+      seq = docStore.maxSeq
     }
-
-    private def release(df: DataFrame): Unit =
-      graft.operators.ConnectedComponents.releaseBlocks(df)
 
     /** Ingest one batch of (doc_id, source, text) rows (extra columns
       * ignored); all-or-nothing like the family's other ingests.
       */
-    def ingest(batch: DataFrame): Unit = {
-      val temps = mutable.ListBuffer.empty[DataFrame]
-      def temp(df: DataFrame): DataFrame = { temps += df; df }
-      try ingestTracked(batch, temp)
-      finally temps.foreach(release)
-    }
-
-    private def ingestTracked(batch: DataFrame,
+    protected def ingestWith(batch: DataFrame,
         temp: DataFrame => DataFrame): Unit = {
-      def latestDocsOf(ids: DataFrame): DataFrame =
-        latestBy("doc_id")(docStore.frame
-          .join(ids, Seq("doc_id"), "left_semi"))
-
       // token count and fingerprints EXACTLY as batch q156 computes them
       val newDocs = temp(batch
         .select(col("doc_id").cast("long").as("doc_id"),
@@ -195,58 +164,22 @@ object StreamingExport {
             md5(array_join(array_sort(tokens(normText(col("text")))), " ")),
             lit("<null-text>")).as("nfp"),
           // null text → null array; the explode below emits no rows
-          array_distinct(wordNgrams(tokens(col("text")), 5)).as("gs5"))
-        .localCheckpoint(true))
+          array_distinct(wordNgrams(tokens(col("text")), 5)).as("gs5")))
 
-      // the four-way replay/reuse decision (StreamingMixture verbatim)
-      val idStats = newDocs
-        .join(latestDocsOf(newDocs.select(col("doc_id")))
-            .select(col("doc_id"), lit(1).as("seen"),
-              col("fp").as("seen_fp")),
-          Seq("doc_id"), "left_outer")
-        .agg(count(lit(1)).as("n"), count_distinct(col("doc_id")).as("nd"),
-          sum(coalesce(col("seen"), lit(0))).as("replayed"),
-          sum(when(col("seen_fp") === col("fp"), 1L).otherwise(0L))
-            .as("matched"))
-        .head()
-      val nNew = idStats.getLong(0)
-      if (nNew != idStats.getLong(1)) throw new IllegalStateException(
-        s"StreamingExport: batch carries ${nNew - idStats.getLong(1)} " +
-          "duplicate doc_id rows — refusing to corrupt the manifest")
-      if (nNew == 0L) return
-      val nReplayed = idStats.getLong(2)
-      val nMatched = idStats.getLong(3)
-      if (nReplayed == nNew && nMatched == nNew) {
-        System.err.println(s"[graft] StreamingExport: all $nNew doc_ids " +
-          "already ingested with matching fingerprints — idempotent " +
-          "replay skip")
-        return
-      }
-      if (nReplayed == nNew) throw new IllegalStateException(
-        s"StreamingExport: all $nNew doc_ids already ingested but " +
-          s"${nNew - nMatched} fingerprints differ — doc_id reuse, " +
-          "refusing to corrupt the manifest")
-      if (nReplayed > 0L) throw new IllegalStateException(
-        s"StreamingExport: $nReplayed of $nNew doc_ids already ingested " +
-          "— partial overlap is doc_id reuse, refusing")
+      if (StateFrames.admit("StreamingExport", newDocs,
+          docStore.latestOf(newDocs.select(col("doc_id")))) == 0L) return
 
       // ----------------------------------------- canonical arm (q34)
       val batchFp = temp(newDocs
-        .groupBy(col("nfp")).agg(min(col("doc_id")).as("claimant"))
-        .localCheckpoint(true))
-      val heldFp = temp(latestBy("nfp")(fpStore.frame
-          .join(batchFp.select(col("nfp")), Seq("nfp"), "left_semi"))
-        .select(col("nfp"), col("holder"))
-        .localCheckpoint(true))
-      val fpJoined = temp(batchFp
-        .join(heldFp, Seq("nfp"), "left_outer")
-        .localCheckpoint(true))
+        .groupBy(col("nfp")).agg(min(col("doc_id")).as("claimant")))
+      val heldFp = temp(fpStore.latestOf(batchFp.select(col("nfp")))
+        .select(col("nfp"), col("holder")))
+      val fpJoined = temp(batchFp.join(heldFp, Seq("nfp"), "left_outer"))
       // a group's holder flips iff unheld or claimed by a LOWER id; the
       // displaced stored holder is demoted (exactly one doc per flip)
       val fpFlips = temp(fpJoined
         .filter(col("holder").isNull || col("claimant") < col("holder"))
-        .select(col("nfp"), col("claimant"), col("holder"))
-        .localCheckpoint(true))
+        .select(col("nfp"), col("claimant"), col("holder")))
       val demotedFp = fpFlips.filter(col("holder").isNotNull)
         .select(col("holder").as("doc_id"))
       // effective min per batch group: new docs' canonical flag source
@@ -257,84 +190,62 @@ object StreamingExport {
       // ------------------------------------ contamination arm (q63)
       val g5new = temp(newDocs
         .select(col("doc_id"), explode(col("gs5")).as("gram"))
-        .select(col("doc_id"), xxhash64(col("gram")).as("ng"))
-        .localCheckpoint(true))
+        .select(col("doc_id"), xxhash64(col("gram")).as("ng")))
       val benchNewG = temp(g5new.filter(col("doc_id") < 10)
         .select(col("ng")).distinct()
-        .join(benchStore.frame, Seq("ng"), "left_anti")
-        .localCheckpoint(true))
-      val corpusG5New = temp(g5new.filter(col("doc_id") >= 10)
-        .localCheckpoint(true))
+        .join(benchStore.frame, Seq("ng"), "left_anti"))
+      val corpusG5New = temp(g5new.filter(col("doc_id") >= 10))
       // new corpus docs against the full bench set (stored + this batch)
       val contamNew = temp(corpusG5New
         .join(benchStore.frame.unionByName(benchNewG), Seq("ng"),
           "left_semi")
-        .select(col("doc_id")).distinct()
-        .localCheckpoint(true))
+        .select(col("doc_id")).distinct())
       // late bench arrival retracts stored corpus docs — only docs not
       // already contaminated are touched (the flip is monotone)
-      val contamStoredAll = temp(cg5Store.frame
-        .join(benchNewG, Seq("ng"), "left_semi")
-        .select(col("doc_id")).distinct()
-        .localCheckpoint(true))
-      val contamStored = temp(latestBy("doc_id")(docStore.frame
-          .join(contamStoredAll, Seq("doc_id"), "left_semi"))
+      val contamStoredAll = temp(cg5Store.touching(benchNewG)
+        .select(col("doc_id")).distinct())
+      val contamStored = temp(docStore.latestOf(contamStoredAll)
         .filter(!col("contaminated"))
-        .select(col("doc_id"))
-        .localCheckpoint(true))
+        .select(col("doc_id")))
 
       // ------------------------------------------ removal arm (q155)
       val g10new = temp(DupSpans
-        .positionalGrams(newDocs.select(col("doc_id"), col("text")))
-        .localCheckpoint(true))
+        .positionalGrams(newDocs.select(col("doc_id"), col("text"))))
       val batchMin10 = temp(g10new
         .groupBy(col("ng"))
         .agg(min(struct(col("doc_id"), col("pos"))).as("m"))
         .select(col("ng"), col("m.doc_id").as("mdoc"),
-          col("m.pos").as("mpos"))
-        .localCheckpoint(true))
-      val held10 = temp(latestBy("ng")(holdStore.frame
-          .join(batchMin10.select(col("ng")), Seq("ng"), "left_semi"))
-        .select(col("ng"), col("hdoc"), col("hpos"))
-        .localCheckpoint(true))
-      val j10 = temp(batchMin10
-        .join(held10, Seq("ng"), "left_outer")
-        .localCheckpoint(true))
+          col("m.pos").as("mpos")))
+      val held10 = temp(holdStore.latestOf(batchMin10.select(col("ng")))
+        .select(col("ng"), col("hdoc"), col("hpos")))
+      val j10 = temp(batchMin10.join(held10, Seq("ng"), "left_outer"))
       // a gram's keep-first holder flips iff unheld or the batch's min
       // occurrence out-ranks it lexicographically on (doc_id, pos)
       val flips10 = temp(j10
         .filter(col("hdoc").isNull ||
           struct(col("mdoc"), col("mpos")) <
             struct(col("hdoc"), col("hpos")))
-        .select(col("ng"), col("mdoc"), col("mpos"), col("hdoc"))
-        .localCheckpoint(true))
+        .select(col("ng"), col("mdoc"), col("mpos"), col("hdoc")))
       // stored docs whose kept position just flipped to removed
       val demoted10 = temp(flips10.filter(col("hdoc").isNotNull)
-        .select(col("hdoc").as("doc_id")).distinct()
-        .localCheckpoint(true))
+        .select(col("hdoc").as("doc_id")).distinct())
 
       // recompute removal stats for exactly (batch docs ∪ flip-touched
       // stored docs): their positions against the POST-update holders
-      val posAll = temp(g10new
-        .unionByName(g10Store.frame
-          .join(demoted10, Seq("doc_id"), "left_semi"))
-        .localCheckpoint(true))
-      val holdersOld = latestBy("ng")(holdStore.frame
-        .join(posAll.select(col("ng")).distinct(), Seq("ng"), "left_semi"))
+      val posAll = temp(g10new.unionByName(g10Store.touching(demoted10)))
+      val holdersOld = holdStore.latestOf(posAll.select(col("ng")).distinct())
         .select(col("ng"), col("hdoc"), col("hpos"))
       val holdersUpd = temp(flips10
         .select(col("ng"), col("mdoc").as("hdoc"), col("mpos").as("hpos"))
         .unionByName(holdersOld.join(flips10.select(col("ng")), Seq("ng"),
-          "left_anti"))
-        .localCheckpoint(true))
+          "left_anti")))
       val removedPos = posAll
         .join(holdersUpd, Seq("ng"))
         .filter(!(col("doc_id") === col("hdoc") &&
           col("pos") === col("hpos")))
         .select(col("doc_id"), col("pos"))
       val stats = temp(DupSpans.perDocStats(removedPos)
-        .select(col("doc_id"), col("dup_tokens").as("new_removed"))
-        .localCheckpoint(true))
+        .select(col("doc_id"), col("dup_tokens").as("new_removed")))
 
       // ------------------------------------------ doc-store updates
       val newRows = temp(newDocs
@@ -346,16 +257,13 @@ object StreamingExport {
           col("source"), col("n_tokens"),
           (col("doc_id") === col("eff")).as("canonical"),
           coalesce(col("bad"), lit(false)).as("contaminated"),
-          coalesce(col("new_removed"), lit(0L)).as("removed"))
-        .localCheckpoint(true))
+          coalesce(col("new_removed"), lit(0L)).as("removed")))
 
       val touchedIds = temp(demotedFp
         .unionByName(contamStored)
         .unionByName(demoted10)
-        .distinct()
-        .localCheckpoint(true))
-      val latestTouched = temp(latestDocsOf(touchedIds)
-        .localCheckpoint(true))
+        .distinct())
+      val latestTouched = temp(docStore.latestOf(touchedIds))
       // every flip must land on a doc the doc store knows — a holder or
       // gram store referencing an unknown doc_id would otherwise drop
       // its retraction SILENTLY (the worst failure mode of a manifest)
@@ -378,8 +286,7 @@ object StreamingExport {
           (col("canonical") && col("demote").isNull).as("canonical"),
           (col("contaminated") || col("flip_bad").isNotNull)
             .as("contaminated"),
-          coalesce(col("upd_removed"), col("removed")).as("removed"))
-        .localCheckpoint(true))
+          coalesce(col("upd_removed"), col("removed")).as("removed")))
 
       // fail LOUD on any non-monotone transition: canonical may only be
       // revoked, contamination may only be acquired, removed tokens may
@@ -396,41 +303,24 @@ object StreamingExport {
           "transition (canonical re-granted, contamination cleared, or " +
           "removed tokens shrinking) — stores corrupt, refusing")
 
-      val docRows = temp(newRows.unionByName(touchedRows)
-        .localCheckpoint(true))
+      val docRows = temp(newRows.unionByName(touchedRows))
       val fpRows = temp(fpFlips
         .select(col("nfp"), lit(seq + 1).as("seq"),
-          col("claimant").as("holder"))
-        .localCheckpoint(true))
+          col("claimant").as("holder")))
       val holdRows = temp(flips10
         .select(col("ng"), lit(seq + 1).as("seq"),
-          col("mdoc").as("hdoc"), col("mpos").as("hpos"))
-        .localCheckpoint(true))
-      val cg5Rows = temp(corpusG5New.select(col("ng"), col("doc_id"))
-        .localCheckpoint(true))
+          col("mdoc").as("hdoc"), col("mpos").as("hpos")))
+      val cg5Rows = temp(corpusG5New.select(col("ng"), col("doc_id")))
 
-      // all fallible work done; segments materialize in failure-safe
-      // order (any throw unpersists what's already built), then driver
-      // commit only
-      val prepared = mutable.ListBuffer.empty[
-        (StateFrames.SegmentedStore, (DataFrame, org.apache.spark.rdd.RDD[Row]))]
-      try {
-        def prep(store: StateFrames.SegmentedStore, df: DataFrame): Unit =
-          if (!df.isEmpty) prepared += ((store, store.prepare(df)))
-        prep(docStore, docRows)
-        prep(fpStore, fpRows)
-        prep(benchStore, benchNewG)
-        prep(cg5Store, cg5Rows)
-        prep(g10Store, g10new)
-        prep(holdStore, holdRows)
-      } catch {
-        case t: Throwable =>
-          prepared.foreach(_._2._2.unpersist(blocking = false))
-          throw t
-      }
+      // all fallible work done; the non-empty segments materialize,
+      // then driver commit only
+      val prepared = StateFrames.prepareAll(Seq(docStore -> docRows,
+          fpStore -> fpRows, benchStore -> benchNewG, cg5Store -> cg5Rows,
+          g10Store -> g10new, holdStore -> holdRows)
+        .filter { case (_, rows) => !rows.isEmpty })
       this.synchronized {
         seq += 1
-        prepared.foreach { case (store, seg) => store.commit(seg) }
+        StateFrames.commitAll(prepared)
       }
     }
 
@@ -438,9 +328,8 @@ object StreamingExport {
       * schema and values over everything ingested so far. Reads the
       * latest doc row per doc; no gram-store scan.
       */
-    def snapshot(): DataFrame = {
-      val frame = this.synchronized(docStore.frame)
-      latestBy("doc_id")(frame)
+    def snapshot(): DataFrame =
+      this.synchronized(docStore.latest)
         .filter(col("doc_id") >= 10 && col("canonical") &&
           !col("contaminated"))
         .groupBy(col("source"))
@@ -449,7 +338,6 @@ object StreamingExport {
           sum(col("n_tokens") - col("removed")).as("tokens_exported"))
         .withColumn("kept_ppm",
           expr("tokens_exported * 1000000L div greatest(tokens_raw, 1L)"))
-    }
   }
 
   def state(spark: SparkSession): ExportState = new ExportState(spark)
@@ -464,15 +352,4 @@ object StreamingExport {
     st.loadFrom(docs, fps, bench, cg5, g10, hold)
     st
   }
-
-  /** Wire a streaming (doc_id, source, text) frame into `st` — one
-    * foreachBatch ingest per micro-batch (replay handling makes
-    * at-least-once delivery effectively-once).
-    */
-  def attach(docs: DataFrame, st: ExportState): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        st.ingest(b.toDF()))
-      .start()
 }

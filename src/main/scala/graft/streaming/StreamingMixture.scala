@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incremental post-dedup mixture accounting — batch q147's streaming twin
@@ -58,7 +57,7 @@ import org.apache.spark.sql.types._
   *     an id-counter reset shipping NEW documents under old ids (which
   *     fails loud — an id-only skip would silently drop them).
   *     Skip-if-identical + all-or-nothing ingest (see the commit point
-  *     in `ingestTracked`) = effectively-once.
+  *     in `ingestWith`) = effectively-once — [[StateFrames.admit]].
   *   - hot-bucket pairwork (`graft.mixture.pairworkGuard` = warn default
   *     / fail / off, threshold `graft.mixture.maxPairworkPerDoc` = 64):
   *     the band-index join is deliberately UNCAPPED for exact ≡ q147, so
@@ -75,7 +74,7 @@ import org.apache.spark.sql.types._
   * touched-component fetch prunes) updated per-key via MERGE / a state
   * store; the local harness emulates them with materialized lineage-cut
   * frames (stats-reset RDD[Row] leaves for the two STORES — see
-  * `materializeState` for why Dataset.localCheckpoint's stats
+  * [[StateFrames]] for why Dataset.localCheckpoint's stats
   * preservation is fatal across many batches — and localCheckpoints for
   * within-batch temps) — an emulation cost, not an algorithmic one, and
   * BOUNDED: each ingest explicitly unpersists the superseded ledger
@@ -111,7 +110,7 @@ object StreamingMixture {
 
   /** Mutable per-stream state; one instance per logical ingest pipeline. */
   final class MixtureState(spark: SparkSession,
-      private[streaming] val compactAt: Int = 32) {
+      private[streaming] val compactAt: Int = 32) extends IncrementalState {
     import spark.implicits._
 
     private val bandsSchema = StructType(Seq(
@@ -147,16 +146,6 @@ object StreamingMixture {
 
     private def bands: DataFrame = bandStore.frame
 
-    /** Materialize a STATE frame as a lineage-severed, stats-reset leaf —
-      * see [[StateFrames.materialize]] for why `Dataset.localCheckpoint`'s
-      * stats preservation is fatal at stream length (the round-13
-      * BigInteger.multiplyToomCook3 wedge) and why the RDD round-trip is
-      * a documented local-emulation cost.
-      */
-    private def materializeState(df: DataFrame)
-        : (DataFrame, org.apache.spark.rdd.RDD[Row]) =
-      StateFrames.materialize(spark, df)
-
     // per-source [n_docs, n_survivors, tokens_total, tokens_surviving]:
     // bounded by |sources| — the one driver-side piece, same contract as
     // the family's ≤K centroid models
@@ -166,18 +155,6 @@ object StreamingMixture {
       val a = agg.getOrElseUpdate(src, Array.fill(4)(0L))
       var i = 0; while (i < 4) { a(i) += d(i); i += 1 }
     }
-
-    /** Unpersist the localCheckpoint blocks backing `df`, if any — the
-      * frames this state materializes are all eager localCheckpoints
-      * whose plan is a [[org.apache.spark.sql.execution.LogicalRDD]];
-      * releasing the RDD as soon as a frame is superseded bounds
-      * executor storage to one live copy of each store (without this,
-      * blocks linger until driver GC happens to trigger the
-      * ContextCleaner — unbounded over a long-running stream).
-      * Delegates to the one shared unpersist helper.
-      */
-    private def release(df: DataFrame): Unit =
-      graft.operators.ConnectedComponents.releaseBlocks(df)
 
     /** Exposed for the spec's doc-level monotonicity assertions. */
     private[streaming] def ledgerFrame: DataFrame = ledger
@@ -191,7 +168,7 @@ object StreamingMixture {
     private[streaming] def loadFrom(bandsStore: DataFrame,
         ledgerStore: DataFrame): Unit = {
       val oldLedger = ledgerBlocks
-      val (l, lRdd) = materializeState(ledgerStore
+      val (l, lRdd) = StateFrames.materialize(spark, ledgerStore
         .select(col("doc_id"), col("source"), col("tok"), col("rep"),
           col("fp")))
       val restored = l.groupBy(col("source"))
@@ -202,8 +179,7 @@ object StreamingMixture {
             .otherwise(0L)).as("ts"))
         .collect()
       this.synchronized {
-        bandStore.reset(bandsStore
-          .select(col("band").cast("int"), col("bkey"), col("doc_id")))
+        bandStore.reset(bandsStore)
         ledger = l; ledgerBlocks = Some(lRdd)
         oldLedger.foreach(_.unpersist(blocking = false))
         agg.clear()
@@ -276,16 +252,7 @@ object StreamingMixture {
       * and apply the mixture deltas. Batch-internal collisions count too
       * (two near-dup docs arriving together pair immediately).
       */
-    def ingest(batch: DataFrame): Unit = {
-      // per-batch intermediate checkpoints, released when the batch is
-      // fully applied (bounds executor storage — see the class doc)
-      val temps = mutable.ListBuffer.empty[DataFrame]
-      def temp(df: DataFrame): DataFrame = { temps += df; df }
-      try ingestTracked(batch, temp)
-      finally temps.foreach(release)
-    }
-
-    private def ingestTracked(batch: DataFrame,
+    protected def ingestWith(batch: DataFrame,
         temp: DataFrame => DataFrame): Unit = {
       // tok EXACTLY as q147 computes it (whitespace token count, null → 0);
       // fp is the replay-vs-reuse content fingerprint (see ledgerSchema)
@@ -294,77 +261,16 @@ object StreamingMixture {
           col("source"),
           coalesce(size(split(col("text"), " ")).cast("long"), lit(0L))
             .as("tok"),
-          xxhash64(col("source"), col("text")).as("fp"))
-        .localCheckpoint(true))
+          xxhash64(col("source"), col("text")).as("fp")))
 
-      // Re-delivery handling — ONE job checks every form (count vs
-      // distinct-count catches batch-internal repeats; the ledger left
-      // join — a keyed lookup at a deployment — counts already-ingested
-      // ids):
-      //   - batch-internal duplicate rows: always a contract violation,
-      //     fail loud (would double-count within one ingest).
-      //   - ALL ids already ingested AND all content fingerprints match:
-      //     an idempotent SKIP, not an error. foreachBatch is
-      //     at-least-once — a crash between a successful ingest (+ store
-      //     persist) and the streaming checkpoint commit re-delivers the
-      //     whole micro-batch on restart, so throwing here would
-      //     crash-loop the resumed stream forever; skipping the
-      //     fully-applied batch is what turns at-least-once delivery
-      //     into effectively-once ingest.
-      //   - ALL ids already ingested but fingerprints differ: fail loud —
-      //     an upstream id-counter reset shipping NEW documents under old
-      //     ids; an id-only skip would silently drop them forever.
-      //   - SOME ids already ingested: fail loud. A batch replay is
-      //     all-or-nothing (ingest mutates no state on failure — see the
-      //     commit point below), so partial overlap can only be doc_id
-      //     reuse across distinct batches, and proceeding would silently
-      //     corrupt the mixture — the failure mode every guard here
-      //     refuses.
-      val idStats = newDocs
-        .join(ledger.select(col("doc_id"), lit(1).as("seen"),
-            col("fp").as("seen_fp")),
-          Seq("doc_id"), "left_outer")
-        .agg(count(lit(1)).as("n"), count_distinct(col("doc_id")).as("nd"),
-          sum(coalesce(col("seen"), lit(0))).as("replayed"),
-          sum(when(col("seen_fp") === col("fp"), 1L).otherwise(0L))
-            .as("matched"))
-        .head()
-      val nNew = idStats.getLong(0)
-      if (nNew != idStats.getLong(1)) throw new IllegalStateException(
-        s"StreamingMixture: batch carries ${nNew - idStats.getLong(1)} " +
-          "duplicate doc_id rows — the ingest contract requires unique " +
-          "doc_ids within a batch; refusing to double-count mixture " +
-          "weights")
-
-      // an empty trigger is a no-op: without this, it would still rewrite
-      // the whole ledger and append a useless empty band segment
+      // the replay guard reads the whole ledger (a keyed lookup at a
+      // deployment); nNew also feeds the hot-bucket guard
+      val nNew = StateFrames.admit("StreamingMixture", newDocs, ledger)
       if (nNew == 0L) return
-
-      val nReplayed = idStats.getLong(2)
-      val nMatched = idStats.getLong(3)
-      if (nReplayed == nNew && nMatched == nNew) {
-        System.err.println(s"[graft] StreamingMixture: all $nNew doc_ids " +
-          "of this batch are already ingested with matching content " +
-          "fingerprints — skipping as an idempotent replay " +
-          "(at-least-once re-delivery after a restart)")
-        return
-      }
-      if (nReplayed == nNew) throw new IllegalStateException(
-        s"StreamingMixture: all $nNew doc_ids in this batch are already " +
-          s"ingested but ${nNew - nMatched} content fingerprints differ — " +
-          "not a replay, this is doc_id reuse shipping NEW documents " +
-          "under old ids (an id-only skip would silently drop them); " +
-          "refusing to corrupt mixture weights")
-      if (nReplayed > 0L) throw new IllegalStateException(
-        s"StreamingMixture: $nReplayed of $nNew doc_ids in this batch " +
-          "were already ingested but the rest were not — not a whole-" +
-          "batch replay (ingest is all-or-nothing), so this is doc_id " +
-          "reuse; refusing to double-count mixture weights")
 
       val newBands = temp(StreamingLsh
         .bandAssignments(batch.select(col("doc_id"), col("text")))
-        .toDF().select(col("band"), col("bkey"), col("docId").as("doc_id"))
-        .localCheckpoint(true))
+        .toDF().select(col("band"), col("bkey"), col("docId").as("doc_id")))
 
       guardBucketPairwork(nNew, newBands)
 
@@ -376,8 +282,7 @@ object StreamingMixture {
             && col("a.doc_id") =!= col("b.doc_id"))
         .select(least(col("a.doc_id"), col("b.doc_id")).as("u"),
           greatest(col("a.doc_id"), col("b.doc_id")).as("v"))
-        .distinct()
-        .localCheckpoint(true))
+        .distinct())
 
       val (newRows, affLabeled, touchedReps) =
         if (edges.isEmpty) {
@@ -387,7 +292,7 @@ object StreamingMixture {
             .union(edges.select(col("v").as("doc_id"))).distinct()
           // components being merged = current reps of OLD endpoint docs
           val touched = temp(endpoints.join(ledger, "doc_id")
-            .select(col("rep")).distinct().localCheckpoint(true))
+            .select(col("rep")).distinct())
           val affected = ledger.join(touched, "rep")
           // the touched components' connectivity, as (rep → member) stars
           val star = affected
@@ -395,9 +300,7 @@ object StreamingMixture {
             .filter(col("u") =!= col("v"))
           val (ccLabels, _, ccFinal) = graft.operators.ConnectedComponents
             .runHandle(edges.unionByName(star))
-          val labels = temp(ccLabels
-            .withColumnRenamed("node", "doc_id")
-            .localCheckpoint(true))
+          val labels = temp(ccLabels.withColumnRenamed("node", "doc_id"))
           // labels is materialized now; the CC final-round frame's blocks
           // can be released instead of lingering until driver GC (CC's
           // intermediate rounds already release in-loop)
@@ -405,14 +308,13 @@ object StreamingMixture {
           val aff = temp(affected
             .join(labels, Seq("doc_id"), "left_outer")
             .select(col("doc_id"), col("source"), col("tok"), col("rep"),
-              col("fp"), coalesce(col("label"), col("rep")).as("newRep"))
-            .localCheckpoint(true))
+              col("fp"), coalesce(col("label"), col("rep")).as("newRep")))
           val nr = newDocs.join(labels, Seq("doc_id"), "left_outer")
             .select(col("doc_id"), col("source"), col("tok"), col("fp"),
               coalesce(col("label"), col("doc_id")).as("rep"))
           (nr, Some(aff), Some(touched))
         }
-      val newLedgerRows = temp(newRows.localCheckpoint(true))
+      val newLedgerRows = temp(newRows)
 
       // fail LOUD if a label ever increased: component minima are monotone
       // under edge additions, so this can only be a bug — and a silently
@@ -474,7 +376,7 @@ object StreamingMixture {
       // at most nothing (segment released) rather than a full duplicate
       // ledger waiting on driver GC
       val newSeg = bandStore.prepare(newBands)
-      val (l, lRdd) = try materializeState(updated) catch {
+      val (l, lRdd) = try StateFrames.materialize(spark, updated) catch {
         case t: Throwable =>
           newSeg._2.unpersist(blocking = false)
           throw t
@@ -546,16 +448,4 @@ object StreamingMixture {
     st.loadFrom(bandsStore, ledgerStore)
     st
   }
-
-  /** Wire a streaming (doc_id, source, text) frame into `st` — one
-    * foreachBatch ingest per micro-batch (the K3 discipline: the ledger
-    * update is a transactional MERGE at a deployment, so foreachBatch is
-    * the honest sink shape, like DimRouter's).
-    */
-  def attach(docs: DataFrame, st: MixtureState): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        st.ingest(b.toDF()))
-      .start()
 }

@@ -1,11 +1,7 @@
 package graft.streaming
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incremental gram-novelty scoring — batch q153's streaming twin: as
@@ -28,8 +24,8 @@ import org.apache.spark.sql.types._
   *     arriving lower id.
   *   - `counts` store: per-doc (seq-versioned) n_grams / n_first rows
   *     plus the content fingerprint; reads keep the latest version,
-  *     compaction folds dead versions away (the SegmentedStore `fold`
-  *     hook, shared with StreamingSpanMerge's span store).
+  *     compaction folds dead versions away (a versioned
+  *     [[StateFrames.SegmentedStore]]).
   *
   * Per batch: collapse to distinct (doc_id, gram-hash), take the
   * batch-internal min per gram, fetch the touched holders (keyed
@@ -41,9 +37,9 @@ import org.apache.spark.sql.types._
   * holder store would mis-route retractions silently), non-negative
   * n_first after retraction (holder increases are impossible BY
   * CONSTRUCTION — the flip filter only ever lowers a holder), and
-  * StreamingMixture's fingerprinted replay discipline verbatim
-  * (whole-batch re-delivery with matching fingerprints skips; id reuse
-  * under new content or partial overlap fails loud).
+  * the fingerprinted replay guard [[StateFrames.admit]] (whole-batch
+  * re-delivery with matching fingerprints skips; id reuse under new
+  * content or partial overlap fails loud).
   *
   * StreamingNoveltySpec proves: streamed snapshot ≡ batch q153 after
   * EVERY prefix, ascending AND descending (descending is the maximal-
@@ -58,7 +54,7 @@ object StreamingNovelty {
 
   /** Mutable per-stream state; one instance per logical ingest pipeline. */
   final class NoveltyState(spark: SparkSession,
-      private[streaming] val compactAt: Int = 32) {
+      private[streaming] val compactAt: Int = 32) extends IncrementalState {
 
     private val holdersSchema = StructType(Seq(
       StructField("ng", LongType), StructField("seq", LongType),
@@ -68,17 +64,10 @@ object StreamingNovelty {
       StructField("fp", LongType), StructField("n_grams", LongType),
       StructField("n_first", LongType)))
 
-    private def latestBy(key: String)(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(
-          Window.partitionBy(col(key)).orderBy(col("seq").desc)))
-        .filter(col("rn") === 1).drop("rn")
-
-    private val holderStore =
-      new StateFrames.SegmentedStore(spark, holdersSchema, compactAt,
-        latestBy("ng"))
-    private val countStore =
-      new StateFrames.SegmentedStore(spark, countsSchema, compactAt,
-        latestBy("doc_id"))
+    private val holderStore = new StateFrames.SegmentedStore(spark,
+      holdersSchema, compactAt, latestBy = Seq("ng"))
+    private val countStore = new StateFrames.SegmentedStore(spark,
+      countsSchema, compactAt, latestBy = Seq("doc_id"))
 
     private var seq = 0L
 
@@ -87,32 +76,16 @@ object StreamingNovelty {
 
     private[streaming] def loadFrom(holders: DataFrame,
         counts: DataFrame): Unit = this.synchronized {
-      holderStore.reset(holders.select(col("ng"), col("seq"), col("holder")))
-      countStore.reset(counts.select(col("doc_id"), col("seq"), col("fp"),
-        col("n_grams"), col("n_first")))
-      val m = countStore.frame.agg(max(col("seq"))).head()
-      seq = if (m.isNullAt(0)) 0L else m.getLong(0)
+      holderStore.reset(holders)
+      countStore.reset(counts)
+      seq = countStore.maxSeq
     }
-
-    private def release(df: DataFrame): Unit =
-      graft.operators.ConnectedComponents.releaseBlocks(df)
 
     /** Ingest one batch of (doc_id, text) rows (extra columns ignored);
       * all-or-nothing like the family's other ingests.
       */
-    def ingest(batch: DataFrame): Unit = {
-      val temps = mutable.ListBuffer.empty[DataFrame]
-      def temp(df: DataFrame): DataFrame = { temps += df; df }
-      try ingestTracked(batch, temp)
-      finally temps.foreach(release)
-    }
-
-    private def ingestTracked(batch: DataFrame,
+    protected def ingestWith(batch: DataFrame,
         temp: DataFrame => DataFrame): Unit = {
-      def latestCountsOf(ids: DataFrame): DataFrame =
-        latestBy("doc_id")(countStore.frame
-          .join(ids, Seq("doc_id"), "left_semi"))
-
       // distinct grams per doc, EXACTLY q153's gram space (whitespace
       // tokens, 10-gram, in-row distinct, xxhash64)
       val newDocs = temp(batch
@@ -121,52 +94,19 @@ object StreamingNovelty {
           xxhash64(col("text")).as("fp"))
         .select(col("doc_id"), col("fp"),
           coalesce(size(col("gs")), lit(0)).cast("long").as("n_grams"),
-          col("gs"))
-        .localCheckpoint(true))
+          col("gs")))
 
-      // the four-way replay/reuse decision (StreamingMixture verbatim)
-      val idStats = newDocs
-        .join(latestCountsOf(newDocs.select(col("doc_id")))
-            .select(col("doc_id"), lit(1).as("seen"),
-              col("fp").as("seen_fp")),
-          Seq("doc_id"), "left_outer")
-        .agg(count(lit(1)).as("n"), count_distinct(col("doc_id")).as("nd"),
-          sum(coalesce(col("seen"), lit(0))).as("replayed"),
-          sum(when(col("seen_fp") === col("fp"), 1L).otherwise(0L))
-            .as("matched"))
-        .head()
-      val nNew = idStats.getLong(0)
-      if (nNew != idStats.getLong(1)) throw new IllegalStateException(
-        s"StreamingNovelty: batch carries ${nNew - idStats.getLong(1)} " +
-          "duplicate doc_id rows — refusing to double-count novelty")
-      if (nNew == 0L) return
-      val nReplayed = idStats.getLong(2)
-      val nMatched = idStats.getLong(3)
-      if (nReplayed == nNew && nMatched == nNew) {
-        System.err.println(s"[graft] StreamingNovelty: all $nNew doc_ids " +
-          "already ingested with matching fingerprints — idempotent " +
-          "replay skip")
-        return
-      }
-      if (nReplayed == nNew) throw new IllegalStateException(
-        s"StreamingNovelty: all $nNew doc_ids already ingested but " +
-          s"${nNew - nMatched} fingerprints differ — doc_id reuse, " +
-          "refusing to corrupt novelty accounting")
-      if (nReplayed > 0L) throw new IllegalStateException(
-        s"StreamingNovelty: $nReplayed of $nNew doc_ids already ingested " +
-          "— partial overlap is doc_id reuse, refusing")
+      if (StateFrames.admit("StreamingNovelty", newDocs,
+          countStore.latestOf(newDocs.select(col("doc_id")))) == 0L) return
 
       // per gram, the batch's min-id claimant
       val batchMin = temp(newDocs
         .select(col("doc_id"), explode(col("gs")).as("gram"))
         .select(col("doc_id"), xxhash64(col("gram")).as("ng"))
-        .groupBy(col("ng")).agg(min(col("doc_id")).as("claimant"))
-        .localCheckpoint(true))
+        .groupBy(col("ng")).agg(min(col("doc_id")).as("claimant")))
 
       // pruned fetch of the touched holders (keyed lookup at deployment)
-      val pruned = temp(holderStore.frame
-        .join(batchMin.select(col("ng")), Seq("ng"), "left_semi")
-        .localCheckpoint(true))
+      val pruned = temp(holderStore.touching(batchMin.select(col("ng"))))
 
       // sanity: minima are monotone — a claimant above the holder never
       // flips by the filter below; what CAN silently corrupt is a
@@ -174,23 +114,21 @@ object StreamingNovelty {
       // keep-latest picks an ARBITRARY holder and mis-routes the
       // retraction — so check the PRE-keep-latest frame, where such
       // duplicates are still visible (post-collapse the guard would be
-      // unreachable: latestBy's row_number leaves exactly one row per ng)
+      // unreachable: keep-latest leaves exactly one row per ng)
       val dupHolders = pruned.groupBy(col("ng"), col("seq"))
         .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
       if (dupHolders > 0) throw new IllegalStateException(
         s"StreamingNovelty: $dupHolders (gram, seq) pairs carry duplicate " +
           "holder rows — the holder store is corrupt, refusing")
 
-      val held = temp(latestBy("ng")(pruned)
-        .select(col("ng"), col("holder"))
-        .localCheckpoint(true))
+      val held = temp(holderStore.keepLatest(pruned)
+        .select(col("ng"), col("holder")))
 
       // a gram flips to the claimant iff unheld, or held by a LARGER id
       val flips = temp(batchMin
         .join(held, Seq("ng"), "left_outer")
         .filter(col("holder").isNull || col("claimant") < col("holder"))
-        .select(col("ng"), col("claimant"), col("holder"))
-        .localCheckpoint(true))
+        .select(col("ng"), col("claimant"), col("holder")))
 
       val gains = flips.groupBy(col("claimant").as("doc_id"))
         .agg(count(lit(1)).as("gain"))
@@ -205,46 +143,36 @@ object StreamingNovelty {
         .select(col("doc_id"), lit(seq + 1).as("seq"), col("fp"),
           col("n_grams"),
           coalesce(col("gain"), lit(0L)).as("n_first"))
-      val touched = temp(latestCountsOf(
-          losses.select(col("doc_id")))
+      val touched = temp(countStore.latestOf(losses.select(col("doc_id")))
         .join(losses, Seq("doc_id"))
         .select(col("doc_id"), lit(seq + 1).as("seq"), col("fp"),
-          col("n_grams"), (col("n_first") - col("loss")).as("n_first"))
-        .localCheckpoint(true))
+          col("n_grams"), (col("n_first") - col("loss")).as("n_first")))
       val bad = touched.filter(col("n_first") < 0).count()
       if (bad > 0) throw new IllegalStateException(
         s"StreamingNovelty: $bad docs would go NEGATIVE n_first after " +
           "retraction — accounting corrupt, refusing")
-      val countRows = temp(newRows.unionByName(touched)
-        .localCheckpoint(true))
+      val countRows = temp(newRows.unionByName(touched))
       val holderRows = temp(flips
         .select(col("ng"), lit(seq + 1).as("seq"),
-          col("claimant").as("holder"))
-        .localCheckpoint(true))
+          col("claimant").as("holder")))
 
       // all fallible work done; segments materialize, then driver commit
-      val hSeg = holderStore.prepare(holderRows)
-      val cSeg = try countStore.prepare(countRows) catch {
-        case t: Throwable =>
-          hSeg._2.unpersist(blocking = false); throw t
-      }
+      val prepared = StateFrames.prepareAll(
+        Seq(holderStore -> holderRows, countStore -> countRows))
       this.synchronized {
         seq += 1
-        holderStore.commit(hSeg)
-        countStore.commit(cSeg)
+        StateFrames.commitAll(prepared)
       }
     }
 
     /** The current per-doc novelty — batch q153's exact schema and
       * values over everything ingested so far.
       */
-    def snapshot(): DataFrame = {
-      val frame = this.synchronized(countStore.frame)
-      latestBy("doc_id")(frame)
+    def snapshot(): DataFrame =
+      this.synchronized(countStore.latest)
         .select(col("doc_id"), col("n_grams"), col("n_first"))
         .withColumn("novelty_ppm",
           expr("n_first * 1000000L div greatest(n_grams, 1L)"))
-    }
   }
 
   def state(spark: SparkSession): NoveltyState = new NoveltyState(spark)
@@ -256,12 +184,4 @@ object StreamingNovelty {
     st.loadFrom(holders, counts)
     st
   }
-
-  /** Wire a streaming (doc_id, text) frame into `st`. */
-  def attach(docs: DataFrame, st: NoveltyState): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        st.ingest(b.toDF()))
-      .start()
 }

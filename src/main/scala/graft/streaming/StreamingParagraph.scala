@@ -1,11 +1,7 @@
 package graft.streaming
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incremental paragraph-level keep-first dedup — batch q159's streaming
@@ -42,7 +38,7 @@ import org.apache.spark.sql.types._
   * fetch (a corrupt store would mis-route retractions silently — the
   * check runs on the PRE-keep-latest frame where duplicates are still
   * visible), non-negative kept counters after retraction, and the
-  * family's fingerprinted replay discipline verbatim.
+  * fingerprinted replay guard [[StateFrames.admit]].
   *
   * StreamingParagraphSpec proves: streamed snapshot ≡ batch q159 after
   * EVERY prefix, ascending AND descending (descending is the maximal-
@@ -57,7 +53,7 @@ object StreamingParagraph {
 
   /** Mutable per-stream state; one instance per logical ingest pipeline. */
   final class ParagraphState(spark: SparkSession,
-      private[streaming] val compactAt: Int = 32) {
+      private[streaming] val compactAt: Int = 32) extends IncrementalState {
 
     private val holdersSchema = StructType(Seq(
       StructField("h", StringType), StructField("seq", LongType),
@@ -68,17 +64,10 @@ object StreamingParagraph {
       StructField("n_paras", LongType), StructField("n_kept", LongType),
       StructField("tokens_kept", LongType)))
 
-    private def latestBy(key: String)(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(
-          Window.partitionBy(col(key)).orderBy(col("seq").desc)))
-        .filter(col("rn") === 1).drop("rn")
-
-    private val holderStore =
-      new StateFrames.SegmentedStore(spark, holdersSchema, compactAt,
-        latestBy("h"))
-    private val countStore =
-      new StateFrames.SegmentedStore(spark, countsSchema, compactAt,
-        latestBy("doc_id"))
+    private val holderStore = new StateFrames.SegmentedStore(spark,
+      holdersSchema, compactAt, latestBy = Seq("h"))
+    private val countStore = new StateFrames.SegmentedStore(spark,
+      countsSchema, compactAt, latestBy = Seq("doc_id"))
 
     private var seq = 0L
 
@@ -87,41 +76,23 @@ object StreamingParagraph {
 
     private[streaming] def loadFrom(holders: DataFrame,
         counts: DataFrame): Unit = this.synchronized {
-      holderStore.reset(holders.select(col("h"), col("seq"), col("hdoc"),
-        col("hidx").cast("int")))
-      countStore.reset(counts.select(col("doc_id"), col("seq"), col("fp"),
-        col("n_tokens"), col("n_paras"), col("n_kept"), col("tokens_kept")))
-      val m = countStore.frame.agg(max(col("seq"))).head()
-      seq = if (m.isNullAt(0)) 0L else m.getLong(0)
+      holderStore.reset(holders)
+      countStore.reset(counts)
+      seq = countStore.maxSeq
     }
-
-    private def release(df: DataFrame): Unit =
-      graft.operators.ConnectedComponents.releaseBlocks(df)
 
     /** Ingest one batch of (doc_id, text) rows (extra columns ignored);
       * all-or-nothing like the family's other ingests.
       */
-    def ingest(batch: DataFrame): Unit = {
-      val temps = mutable.ListBuffer.empty[DataFrame]
-      def temp(df: DataFrame): DataFrame = { temps += df; df }
-      try ingestTracked(batch, temp)
-      finally temps.foreach(release)
-    }
-
-    private def ingestTracked(batch: DataFrame,
+    protected def ingestWith(batch: DataFrame,
         temp: DataFrame => DataFrame): Unit = {
-      def latestCountsOf(ids: DataFrame): DataFrame =
-        latestBy("doc_id")(countStore.frame
-          .join(ids, Seq("doc_id"), "left_semi"))
-
       // paragraphs EXACTLY as batch q159 derives them (20-token chunks,
       // md5 hash, chunk token count); null text → null array → no rows
       val newDocs = temp(batch
         .select(col("doc_id").cast("long").as("doc_id"), col("text"),
           coalesce(size(tokens(col("text"))), lit(0)).cast("long")
             .as("n_tokens"),
-          xxhash64(col("text")).as("fp"))
-        .localCheckpoint(true))
+          xxhash64(col("text")).as("fp")))
       val paras = temp(newDocs
         .filter(col("text").isNotNull)
         .select(col("doc_id"), tokens(col("text")).as("t"))
@@ -131,40 +102,10 @@ object StreamingParagraph {
               "size(slice(t, i*20+1, 20)) AS sz))"))
           .as(Seq("idx", "p")))
         .select(col("doc_id"), col("idx").cast("int").as("idx"),
-          md5(col("p.c")).as("h"), col("p.sz").cast("long").as("sz"))
-        .localCheckpoint(true))
+          md5(col("p.c")).as("h"), col("p.sz").cast("long").as("sz")))
 
-      // the four-way replay/reuse decision (StreamingMixture verbatim)
-      val idStats = newDocs
-        .join(latestCountsOf(newDocs.select(col("doc_id")))
-            .select(col("doc_id"), lit(1).as("seen"),
-              col("fp").as("seen_fp")),
-          Seq("doc_id"), "left_outer")
-        .agg(count(lit(1)).as("n"), count_distinct(col("doc_id")).as("nd"),
-          sum(coalesce(col("seen"), lit(0))).as("replayed"),
-          sum(when(col("seen_fp") === col("fp"), 1L).otherwise(0L))
-            .as("matched"))
-        .head()
-      val nNew = idStats.getLong(0)
-      if (nNew != idStats.getLong(1)) throw new IllegalStateException(
-        s"StreamingParagraph: batch carries ${nNew - idStats.getLong(1)} " +
-          "duplicate doc_id rows — refusing to double-count paragraphs")
-      if (nNew == 0L) return
-      val nReplayed = idStats.getLong(2)
-      val nMatched = idStats.getLong(3)
-      if (nReplayed == nNew && nMatched == nNew) {
-        System.err.println(s"[graft] StreamingParagraph: all $nNew " +
-          "doc_ids already ingested with matching fingerprints — " +
-          "idempotent replay skip")
-        return
-      }
-      if (nReplayed == nNew) throw new IllegalStateException(
-        s"StreamingParagraph: all $nNew doc_ids already ingested but " +
-          s"${nNew - nMatched} fingerprints differ — doc_id reuse, " +
-          "refusing to corrupt paragraph accounting")
-      if (nReplayed > 0L) throw new IllegalStateException(
-        s"StreamingParagraph: $nReplayed of $nNew doc_ids already " +
-          "ingested — partial overlap is doc_id reuse, refusing")
+      if (StateFrames.admit("StreamingParagraph", newDocs,
+          countStore.latestOf(newDocs.select(col("doc_id")))) == 0L) return
 
       // per paragraph hash, the batch's min-(doc_id, idx) claimant; its
       // sz rides along (equal-hash occurrences share the token count)
@@ -172,22 +113,18 @@ object StreamingParagraph {
         .groupBy(col("h"))
         .agg(min(struct(col("doc_id"), col("idx"), col("sz"))).as("m"))
         .select(col("h"), col("m.doc_id").as("mdoc"),
-          col("m.idx").as("midx"), col("m.sz").as("msz"))
-        .localCheckpoint(true))
+          col("m.idx").as("midx"), col("m.sz").as("msz")))
 
       // pruned fetch of the touched holders (keyed lookup at deployment)
-      val pruned = temp(holderStore.frame
-        .join(batchMin.select(col("h")), Seq("h"), "left_semi")
-        .localCheckpoint(true))
+      val pruned = temp(holderStore.touching(batchMin.select(col("h"))))
       // corrupt-store check BEFORE keep-latest collapses duplicates away
       val dupHolders = pruned.groupBy(col("h"), col("seq"))
         .agg(count(lit(1)).as("c")).filter(col("c") > 1).count()
       if (dupHolders > 0) throw new IllegalStateException(
         s"StreamingParagraph: $dupHolders (paragraph, seq) pairs carry " +
           "duplicate holder rows — the holder store is corrupt, refusing")
-      val held = temp(latestBy("h")(pruned)
-        .select(col("h"), col("hdoc"), col("hidx"))
-        .localCheckpoint(true))
+      val held = temp(holderStore.keepLatest(pruned)
+        .select(col("h"), col("hdoc"), col("hidx")))
 
       // a paragraph flips to the claimant iff unheld, or held by a
       // LARGER (doc_id, idx) occurrence
@@ -197,8 +134,7 @@ object StreamingParagraph {
           struct(col("mdoc"), col("midx")) <
             struct(col("hdoc"), col("hidx")))
         .select(col("h"), col("mdoc"), col("midx"), col("msz"),
-          col("hdoc"))
-        .localCheckpoint(true))
+          col("hdoc")))
 
       // token-weighted deltas: gains to claimants, losses to displaced
       // stored holders (the displaced paragraph's size == msz, same md5)
@@ -219,14 +155,12 @@ object StreamingParagraph {
           coalesce(col("n_paras"), lit(0L)).as("n_paras"),
           coalesce(col("gain_n"), lit(0L)).as("n_kept"),
           coalesce(col("gain_sz"), lit(0L)).as("tokens_kept"))
-      val touched = temp(latestCountsOf(
-          losses.select(col("doc_id")))
+      val touched = temp(countStore.latestOf(losses.select(col("doc_id")))
         .join(losses, Seq("doc_id"))
         .select(col("doc_id"), lit(seq + 1).as("seq"), col("fp"),
           col("n_tokens"), col("n_paras"),
           (col("n_kept") - col("loss_n")).as("n_kept"),
-          (col("tokens_kept") - col("loss_sz")).as("tokens_kept"))
-        .localCheckpoint(true))
+          (col("tokens_kept") - col("loss_sz")).as("tokens_kept")))
       val bad = touched
         .filter(col("n_kept") < 0 || col("tokens_kept") < 0).count()
       if (bad > 0) throw new IllegalStateException(
@@ -241,37 +175,29 @@ object StreamingParagraph {
       if (missing > 0) throw new IllegalStateException(
         s"StreamingParagraph: $missing displaced holders are absent " +
           "from the counts store — holder store is corrupt, refusing")
-      val countRows = temp(newRows.unionByName(touched)
-        .localCheckpoint(true))
+      val countRows = temp(newRows.unionByName(touched))
       val holderRows = temp(flips
         .select(col("h"), lit(seq + 1).as("seq"),
-          col("mdoc").as("hdoc"), col("midx").as("hidx"))
-        .localCheckpoint(true))
+          col("mdoc").as("hdoc"), col("midx").as("hidx")))
 
       // all fallible work done; segments materialize, then driver commit
-      val hSeg = holderStore.prepare(holderRows)
-      val cSeg = try countStore.prepare(countRows) catch {
-        case t: Throwable =>
-          hSeg._2.unpersist(blocking = false); throw t
-      }
+      val prepared = StateFrames.prepareAll(
+        Seq(holderStore -> holderRows, countStore -> countRows))
       this.synchronized {
         seq += 1
-        holderStore.commit(hSeg)
-        countStore.commit(cSeg)
+        StateFrames.commitAll(prepared)
       }
     }
 
     /** The current per-doc paragraph accounting — batch q159's exact
       * schema and values over everything ingested so far.
       */
-    def snapshot(): DataFrame = {
-      val frame = this.synchronized(countStore.frame)
-      latestBy("doc_id")(frame)
+    def snapshot(): DataFrame =
+      this.synchronized(countStore.latest)
         .select(col("doc_id"), col("n_tokens"), col("n_paras"),
           col("n_kept").as("n_paras_kept"), col("tokens_kept"))
         .withColumn("kept_ppm",
           expr("tokens_kept * 1000000L div greatest(n_tokens, 1L)"))
-    }
   }
 
   def state(spark: SparkSession): ParagraphState = new ParagraphState(spark)
@@ -285,15 +211,4 @@ object StreamingParagraph {
     st.loadFrom(holders, counts)
     st
   }
-
-  /** Wire a streaming (doc_id, text) frame into `st` — one foreachBatch
-    * ingest per micro-batch (replay handling makes at-least-once
-    * delivery effectively-once).
-    */
-  def attach(docs: DataFrame, st: ParagraphState): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        st.ingest(b.toDF()))
-      .start()
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incremental physical shard manifest — batch q162's streaming twin: as
@@ -64,7 +63,7 @@ object StreamingShards {
 
   final class ShardState(spark: SparkSession,
       private[streaming] val compactAt: Int = 32,
-      val shardTokens: Long = 4096L) {
+      val shardTokens: Long = 4096L) extends IncrementalState {
 
     private[streaming] val inner =
       new StreamingExport.ExportState(spark, compactAt)
@@ -84,16 +83,11 @@ object StreamingShards {
 
     private[streaming] def asgFrame: DataFrame = asgStore.frame
 
-    private def latestBy(key: String)(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(
-          Window.partitionBy(col(key)).orderBy(col("seq").desc)))
-        .filter(col("rn") === 1).drop("rn")
-
     /** Current export-eligible docs with CURRENT kept tokens — q156's
       * snapshot filter over the inner keep-latest doc view.
       */
     private def eligibleNow: DataFrame =
-      latestBy("doc_id")(inner.docsFrame)
+      inner.latestDocs
         .filter(col("doc_id") >= 10 && col("canonical") &&
           !col("contaminated"))
         .select(col("doc_id"),
@@ -105,7 +99,8 @@ object StreamingShards {
       * only ever LOSE eligibility) is appended to the pack in doc_id
       * order at grant-time kept size.
       */
-    def ingest(batch: DataFrame): Unit = this.synchronized {
+    protected def ingestWith(batch: DataFrame,
+        temp: DataFrame => DataFrame): Unit = this.synchronized {
       inner.ingest(batch) // replay skips and refusals propagate from here
       val grants = eligibleNow
         .join(asgStore.frame.select(col("doc_id")), Seq("doc_id"),
@@ -168,8 +163,7 @@ object StreamingShards {
         bench: DataFrame, cg5: DataFrame, g10: DataFrame, hold: DataFrame,
         asg: DataFrame): Unit = this.synchronized {
       inner.loadFrom(docs, fps, bench, cg5, g10, hold)
-      asgStore.reset(asg.select(col("doc_id"), col("pos"), col("start"),
-        col("kept0"), col("shard_id")))
+      asgStore.reset(asg)
       val m = asgStore.frame
         .agg(coalesce(max(col("pos")), lit(0L)),
           coalesce(max(col("start") + col("kept0")), lit(0L))).head()
@@ -190,14 +184,4 @@ object StreamingShards {
     st.loadFrom(docs, fps, bench, cg5, g10, hold, asg)
     st
   }
-
-  /** Wire a streaming (doc_id, source, text) frame into `st` — one
-    * foreachBatch ingest per micro-batch.
-    */
-  def attach(docs: DataFrame, st: ShardState): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        st.ingest(b.toDF()))
-      .start()
 }

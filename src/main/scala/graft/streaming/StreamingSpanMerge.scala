@@ -1,11 +1,7 @@
 package graft.streaming
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incremental duplicated-span maintenance — batch q149's streaming twin:
@@ -52,10 +48,10 @@ import org.apache.spark.sql.types._
   *     is a union over a monotone duplicated-position set, so a decrease
   *     can only be a bug; the ingest refuses to commit it.
   *   - doc_id uniqueness with the fingerprinted whole-batch replay skip
-  *     (StreamingMixture's discipline verbatim: foreachBatch is
-  *     at-least-once; a full re-delivery with matching content
-  *     fingerprints skips idempotently, id reuse under new content or
-  *     partial overlap fails loud).
+  *     ([[StateFrames.admit]]: foreachBatch is at-least-once; a full
+  *     re-delivery with matching content fingerprints skips
+  *     idempotently, id reuse under new content or partial overlap
+  *     fails loud).
   *
   * Local-emulation costs are the family's documented ones: the three
   * stores are materialized lineage-cut, stats-reset frames
@@ -79,7 +75,7 @@ object StreamingSpanMerge {
 
   /** Mutable per-stream state; one instance per logical ingest pipeline. */
   final class SpanState(spark: SparkSession,
-      private[streaming] val compactAt: Int = 32) {
+      private[streaming] val compactAt: Int = 32) extends IncrementalState {
 
     private val gramsSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("pos", IntegerType),
@@ -91,21 +87,13 @@ object StreamingSpanMerge {
       StructField("n_spans", LongType), StructField("dup_tokens", LongType),
       StructField("max_span_tokens", LongType)))
 
-    /** Latest version per doc (seq is a per-ingest monotone counter). */
-    private def keepLatest(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(
-          Window.partitionBy(col("doc_id")).orderBy(col("seq").desc)))
-        .filter(col("rn") === 1).drop("rn")
-
     private val gramStore =
       new StateFrames.SegmentedStore(spark, gramsSchema, compactAt)
     private val dupStore =
       new StateFrames.SegmentedStore(spark, dupSchema, compactAt)
-    // dead span versions fold away at compaction (reads keep-latest
-    // regardless — the fold changes nothing observable)
-    private val spanStore =
-      new StateFrames.SegmentedStore(spark, spansSchema, compactAt,
-        keepLatest)
+    // versioned per doc (seq is a per-ingest monotone counter)
+    private val spanStore = new StateFrames.SegmentedStore(spark,
+      spansSchema, compactAt, latestBy = Seq("doc_id"))
 
     private var seq = 0L
 
@@ -118,20 +106,13 @@ object StreamingSpanMerge {
 
     private[streaming] def loadFrom(grams: DataFrame, dup: DataFrame,
         spans: DataFrame): Unit = this.synchronized {
-      gramStore.reset(grams
-        .select(col("doc_id"), col("pos").cast("int"), col("ng")))
-      dupStore.reset(dup.select(col("ng")))
-      spanStore.reset(spans.select(col("doc_id"), col("seq"), col("fp"),
-        col("n_tokens"), col("n_spans"), col("dup_tokens"),
-        col("max_span_tokens")))
+      gramStore.reset(grams)
+      dupStore.reset(dup)
+      spanStore.reset(spans)
       // one restart-time scan: resume the version counter past anything
       // ever committed
-      val m = spanStore.frame.agg(max(col("seq"))).head()
-      seq = if (m.isNullAt(0)) 0L else m.getLong(0)
+      seq = spanStore.maxSeq
     }
-
-    private def release(df: DataFrame): Unit =
-      graft.operators.ConnectedComponents.releaseBlocks(df)
 
     /** Ingest one batch of (doc_id, text) rows (extra columns ignored).
       * All fallible cluster work runs before the commit point; a throw
@@ -139,23 +120,14 @@ object StreamingSpanMerge {
       * all-or-nothing (and a post-success re-delivery is skipped whole
       * by the fingerprint guard).
       */
-    def ingest(batch: DataFrame): Unit = {
-      val temps = mutable.ListBuffer.empty[DataFrame]
-      def temp(df: DataFrame): DataFrame = { temps += df; df }
-      try ingestTracked(batch, temp)
-      finally temps.foreach(release)
-    }
-
-    private def ingestTracked(batch: DataFrame,
+    protected def ingestWith(batch: DataFrame,
         temp: DataFrame => DataFrame): Unit = {
       import graft.functions.TextFns.tokens
       // every read of the span store below is PRUNED to the doc_ids at
-      // hand before the keep-latest window runs (a keyed lookup at a
-      // deployment; locally the semi-join scans the store — the family's
-      // documented emulation cost — but no corpus-wide window or
-      // materialization happens per batch)
-      def latestOf(ids: DataFrame): DataFrame =
-        keepLatest(spanStore.frame.join(ids, Seq("doc_id"), "left_semi"))
+      // hand before the keep-latest window runs (`latestOf`: a keyed
+      // lookup at a deployment; locally the semi-join scans the store —
+      // the family's documented emulation cost — but no corpus-wide
+      // window or materialization happens per batch)
       // n_tokens EXACTLY as batch q149 computes it (whitespace token
       // count, null → 0); fp is the replay-vs-reuse content fingerprint
       val newDocs = temp(batch
@@ -163,51 +135,13 @@ object StreamingSpanMerge {
           coalesce(size(tokens(col("text"))), lit(0)).cast("long")
             .as("n_tokens"),
           xxhash64(col("text")).as("fp"),
-          col("text"))
-        .localCheckpoint(true))
+          col("text")))
 
-      // the four-way replay/reuse decision, verbatim from
-      // StreamingMixture (see its ingestTracked for the full rationale):
-      // internal dup → fail; all-replayed+fingerprints-match → skip;
-      // all-replayed+mismatch → fail; partial overlap → fail
-      val idStats = newDocs
-        .join(latestOf(newDocs.select(col("doc_id")))
-            .select(col("doc_id"), lit(1).as("seen"),
-              col("fp").as("seen_fp")),
-          Seq("doc_id"), "left_outer")
-        .agg(count(lit(1)).as("n"), count_distinct(col("doc_id")).as("nd"),
-          sum(coalesce(col("seen"), lit(0))).as("replayed"),
-          sum(when(col("seen_fp") === col("fp"), 1L).otherwise(0L))
-            .as("matched"))
-        .head()
-      val nNew = idStats.getLong(0)
-      if (nNew != idStats.getLong(1)) throw new IllegalStateException(
-        s"StreamingSpanMerge: batch carries ${nNew - idStats.getLong(1)} " +
-          "duplicate doc_id rows — the ingest contract requires unique " +
-          "doc_ids within a batch; refusing to double-count grams")
-      if (nNew == 0L) return
-      val nReplayed = idStats.getLong(2)
-      val nMatched = idStats.getLong(3)
-      if (nReplayed == nNew && nMatched == nNew) {
-        System.err.println(s"[graft] StreamingSpanMerge: all $nNew " +
-          "doc_ids of this batch are already ingested with matching " +
-          "content fingerprints — skipping as an idempotent replay")
-        return
-      }
-      if (nReplayed == nNew) throw new IllegalStateException(
-        s"StreamingSpanMerge: all $nNew doc_ids in this batch are " +
-          s"already ingested but ${nNew - nMatched} content fingerprints " +
-          "differ — doc_id reuse shipping NEW documents under old ids; " +
-          "refusing to corrupt span statistics")
-      if (nReplayed > 0L) throw new IllegalStateException(
-        s"StreamingSpanMerge: $nReplayed of $nNew doc_ids in this batch " +
-          "were already ingested but the rest were not — not a whole-" +
-          "batch replay (ingest is all-or-nothing), so this is doc_id " +
-          "reuse; refusing to corrupt span statistics")
+      if (StateFrames.admit("StreamingSpanMerge", newDocs,
+          spanStore.latestOf(newDocs.select(col("doc_id")))) == 0L) return
 
       val newGrams = temp(DupSpans
-        .positionalGrams(newDocs.select(col("doc_id"), col("text")))
-        .localCheckpoint(true))
+        .positionalGrams(newDocs.select(col("doc_id"), col("text"))))
 
       // flip detection: batch-side occurrence counts, plus a PRUNED fetch
       // of stored occurrences matching the batch's grams (keyed fetch at
@@ -216,36 +150,31 @@ object StreamingSpanMerge {
       // bound in the class doc.
       val batchCnt = newGrams.groupBy(col("ng"))
         .agg(count(lit(1)).as("n_b"))
-      val storedTouched = temp(gramStore.frame
-        .join(newGrams.select(col("ng")).distinct(), Seq("ng"), "left_semi")
-        .localCheckpoint(true))
+      val storedTouched =
+        temp(gramStore.touching(newGrams.select(col("ng")).distinct()))
       val storedCnt = storedTouched.groupBy(col("ng"))
         .agg(count(lit(1)).as("n_s"))
       val flipped = temp(batchCnt
         .join(storedCnt, Seq("ng"), "left_outer")
         .filter(col("n_b") >= 2 || coalesce(col("n_s"), lit(0L)) >= 1)
         .join(dupStore.frame, Seq("ng"), "left_anti")
-        .select(col("ng"))
-        .localCheckpoint(true))
+        .select(col("ng")))
 
       // stored docs whose spans the flips touch (≤ one per flipped gram)
       val touchedOld = temp(storedTouched
         .join(flipped, Seq("ng"), "left_semi")
-        .select(col("doc_id")).distinct()
-        .localCheckpoint(true))
+        .select(col("doc_id")).distinct())
 
       // recompute spans for exactly (new docs ∪ touched stored docs):
       // their positional rows, filtered to the as-of-this-batch dup set
       val dupAll = dupStore.frame.unionByName(flipped)
-      val theirGrams = gramStore.frame
-        .join(touchedOld, Seq("doc_id"), "left_semi")
-        .unionByName(newGrams)
+      val theirGrams = gramStore.touching(touchedOld).unionByName(newGrams)
       val stats = DupSpans.perDocStats(
         theirGrams.join(dupAll, Seq("ng"), "left_semi"))
 
       // static per-doc fields: from the batch for new docs, carried over
       // from the latest span row for touched stored docs
-      val latestTouched = temp(latestOf(touchedOld).localCheckpoint(true))
+      val latestTouched = temp(spanStore.latestOf(touchedOld))
       val info = newDocs.select(col("doc_id"), col("n_tokens"), col("fp"))
         .unionByName(latestTouched
           .select(col("doc_id"), col("n_tokens"), col("fp")))
@@ -255,8 +184,7 @@ object StreamingSpanMerge {
           col("n_tokens"),
           coalesce(col("n_spans"), lit(0L)).as("n_spans"),
           coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"),
-          coalesce(col("max_span_tokens"), lit(0L)).as("max_span_tokens"))
-        .localCheckpoint(true))
+          coalesce(col("max_span_tokens"), lit(0L)).as("max_span_tokens")))
 
       // fail LOUD if coverage ever shrank: duplicated positions are
       // monotone, so span coverage (and the max span) can only grow —
@@ -273,27 +201,14 @@ object StreamingSpanMerge {
           "coverage — monotonicity violated, refusing to ship corrupted " +
           "span statistics")
 
-      // all fallible work done; materialize the three segments, then
-      // commit driver-side only. Batch-sized segments materialize in
-      // failure-safe order (any throw unpersists what's already built).
-      val gSeg = gramStore.prepare(newGrams)
-      val dSeg = try {
-        if (flipped.isEmpty) None else Some(dupStore.prepare(flipped))
-      } catch {
-        case t: Throwable =>
-          gSeg._2.unpersist(blocking = false); throw t
-      }
-      val sSeg = try spanStore.prepare(spanRows) catch {
-        case t: Throwable =>
-          gSeg._2.unpersist(blocking = false)
-          dSeg.foreach(_._2.unpersist(blocking = false))
-          throw t
-      }
+      // all fallible work done; materialize the segments (a batch that
+      // flips no gram appends no dup segment), then commit driver-side
+      val dupRows = if (flipped.isEmpty) Nil else Seq(dupStore -> flipped)
+      val prepared = StateFrames.prepareAll(
+        Seq(gramStore -> newGrams) ++ dupRows ++ Seq(spanStore -> spanRows))
       this.synchronized {
         seq += 1
-        gramStore.commit(gSeg)
-        dSeg.foreach(dupStore.commit)
-        spanStore.commit(sSeg)
+        StateFrames.commitAll(prepared)
       }
     }
 
@@ -301,14 +216,12 @@ object StreamingSpanMerge {
       * and values over everything ingested so far. Reads the latest span
       * version per doc; no gram-store scan.
       */
-    def snapshot(): DataFrame = {
-      val frame = this.synchronized(spanStore.frame)
-      keepLatest(frame)
+    def snapshot(): DataFrame =
+      this.synchronized(spanStore.latest)
         .select(col("doc_id"), col("n_tokens"), col("n_spans"),
           col("dup_tokens"), col("max_span_tokens"))
         .withColumn("dup_ppm",
           expr("dup_tokens * 1000000L div greatest(n_tokens, 1L)"))
-    }
   }
 
   def state(spark: SparkSession): SpanState = new SpanState(spark)
@@ -322,15 +235,4 @@ object StreamingSpanMerge {
     st.loadFrom(grams, dup, spans)
     st
   }
-
-  /** Wire a streaming (doc_id, text) frame into `st` — one foreachBatch
-    * ingest per micro-batch (replay handling makes at-least-once
-    * delivery effectively-once).
-    */
-  def attach(docs: DataFrame, st: SpanState): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        st.ingest(b.toDF()))
-      .start()
 }

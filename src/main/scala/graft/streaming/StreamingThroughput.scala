@@ -103,43 +103,37 @@ object StreamingThroughput {
     // incremental q147 mixture (foreachBatch ingest: band-index join +
     // touched-component CC + delta accounting per micro-batch)
     def mixtureT(ds: Dataset[MixIn]) =
-      Seq(StreamingMixture.attach(ds.toDF(), StreamingMixture.state(spark)))
+      Seq(StreamingMixture.state(spark).attach(ds.toDF()))
     // incremental q148 source-contamination matrix (ingest keys on
     // (source, gram) — the doc_id column is ignored, so the mixture
     // corpus feeds this twin too)
     def contamT(ds: Dataset[MixIn]) =
-      Seq(StreamingContamination.attach(ds.toDF(),
-        StreamingContamination.state(spark)))
+      Seq(StreamingContamination.state(spark).attach(ds.toDF()))
     // incremental q149 span maintenance (foreachBatch ingest: flip
     // detection + touched-doc island recompute per micro-batch)
     def spansT(ds: Dataset[DocIn]) =
-      Seq(StreamingSpanMerge.attach(ds.toDF(),
-        StreamingSpanMerge.state(spark)))
+      Seq(StreamingSpanMerge.state(spark).attach(ds.toDF()))
     // incremental q153 first-holder novelty (foreachBatch ingest:
     // claimant-vs-holder flips + counter deltas per micro-batch)
     def noveltyT(ds: Dataset[DocIn]) =
-      Seq(StreamingNovelty.attach(ds.toDF(),
-        StreamingNovelty.state(spark)))
+      Seq(StreamingNovelty.state(spark).attach(ds.toDF()))
     // incremental q156 export manifest (foreachBatch ingest: all three
     // retraction arms — canonical steal + bench contamination +
     // keep-first holder flips — per micro-batch)
     def exportT(ds: Dataset[MixIn]) =
-      Seq(StreamingExport.attach(ds.toDF(),
-        StreamingExport.state(spark)))
+      Seq(StreamingExport.state(spark).attach(ds.toDF()))
     // incremental q159 paragraph keep-first (foreachBatch ingest:
     // claimant-vs-holder flips + token-weighted deltas per micro-batch)
     def paragraphT(ds: Dataset[DocIn]) =
-      Seq(StreamingParagraph.attach(ds.toDF(),
-        StreamingParagraph.state(spark)))
+      Seq(StreamingParagraph.state(spark).attach(ds.toDF()))
     // incremental q162 shard pack (foreachBatch ingest: the full export
     // twin's three arms PLUS the grant/assignment layer per micro-batch)
     def shardsT(ds: Dataset[MixIn]) =
-      Seq(StreamingShards.attach(ds.toDF(), StreamingShards.state(spark)))
+      Seq(StreamingShards.state(spark).attach(ds.toDF()))
     // incremental q173 boilerplate (foreachBatch ingest: same-source
     // chunk df maintenance + whole-class retraction at the df=3 flip)
     def boilerT(ds: Dataset[MixIn]) =
-      Seq(StreamingBoilerplate.attach(ds.toDF(),
-        StreamingBoilerplate.state(spark)))
+      Seq(StreamingBoilerplate.state(spark).attach(ds.toDF()))
     def mixDocs(dir: String): Seq[MixIn] =
       spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("source"), col("text")).as[MixIn]

@@ -79,6 +79,19 @@ class FunctionsSpec extends SparkSpec {
       .queryExecution.analyzed.toString
     assert(plan.contains("static_invoke") || plan.contains("StaticInvoke"),
       s"unexpected plan: $plan")
+    // the SQL function and tokenizeNative (DwdLogStream's keyword
+    // explode) plan the same expression
+    val docs = Seq("Apple手机 Best").toDF("text")
+    def invokes(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case s: org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+          => s
+      }))
+    val viaSql = invokes(docs.selectExpr("tokenize(text) AS t"))
+    val viaNative = invokes(docs.select(Tokenize.tokenizeNative(col("text"))))
+    assert(viaSql.size == 1 && viaNative.size == 1 &&
+      viaSql.head.semanticEquals(viaNative.head),
+      s"SQL $viaSql vs native $viaNative")
     // the rolling-hash chunker rides the same extension point
     val chunks = spark.sql("SELECT chunk_fingerprints('hello world') AS c")
       .as[Seq[Long]].head()

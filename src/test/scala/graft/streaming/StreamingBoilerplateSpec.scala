@@ -204,8 +204,7 @@ class StreamingBoilerplateSpec extends SparkSpec {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val st = StreamingBoilerplate.state(spark)
     val input = MemoryStream[(Long, String, String)]
-    val q = StreamingBoilerplate.attach(
-      input.toDS().toDF("doc_id", "source", "text"), st)
+    val q = st.attach(input.toDS().toDF("doc_id", "source", "text"))
     try {
       input.addData(Seq((1L, "A", templated("A", "u1")),
         (2L, "A", templated("A", "u2"))))

@@ -110,8 +110,7 @@ class StreamingContaminationSpec extends SparkSpec {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, String)]
     val st = StreamingContamination.state(spark)
-    val q = StreamingContamination.attach(
-      input.toDS().toDF("source", "text"), st)
+    val q = st.attach(input.toDS().toDF("source", "text"))
     try {
       val rows = docsSorted.select("source", "text").collect()
         .map(r => (r.getString(0), r.getString(1))).toSeq

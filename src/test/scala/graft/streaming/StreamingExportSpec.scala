@@ -189,21 +189,20 @@ class StreamingExportSpec extends SparkSpec {
     // idempotent whole-batch replay: skipped, state unchanged
     st.ingest(b1.toDF("doc_id", "source", "text"))
     assert(rowsOf(st.snapshot()) == before)
+    def refusal(rows: (Long, String, String)*): String =
+      intercept[IllegalStateException](
+        st.ingest(rows.toDF("doc_id", "source", "text"))).getMessage
     // same ids, new content → doc_id reuse → refuse
-    intercept[IllegalStateException] {
-      st.ingest(Seq((50L, "s1", "DIFFERENT"), (60L, "s2", "ALSO NEW"))
-        .toDF("doc_id", "source", "text"))
-    }
+    val drift = refusal((50L, "s1", "DIFFERENT"), (60L, "s2", "ALSO NEW"))
+    assert(drift.contains("fingerprints differ") &&
+      drift.contains("doc_id reuse"), drift)
     // partial overlap → refuse
-    intercept[IllegalStateException] {
-      st.ingest(Seq((60L, "s2", "v1 v2 v3"), (77L, "s1", "u1 u2"))
-        .toDF("doc_id", "source", "text"))
-    }
+    val partial = refusal((60L, "s2", "v1 v2 v3"), (77L, "s1", "u1 u2"))
+    assert(partial.contains("partial overlap") &&
+      partial.contains("doc_id reuse"), partial)
     // in-batch duplicate ids → refuse
-    intercept[IllegalStateException] {
-      st.ingest(Seq((88L, "s1", "k1"), (88L, "s1", "k1"))
-        .toDF("doc_id", "source", "text"))
-    }
+    val dup = refusal((88L, "s1", "k1"), (88L, "s1", "k1"))
+    assert(dup.contains("duplicate doc_id") && dup.contains("unique"), dup)
     assert(rowsOf(st.snapshot()) == before, "refusals must not mutate state")
   }
 
@@ -262,8 +261,7 @@ class StreamingExportSpec extends SparkSpec {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, String)]
     val st = StreamingExport.state(spark)
-    val q = StreamingExport.attach(
-      input.toDS().toDF("doc_id", "source", "text"), st)
+    val q = st.attach(input.toDS().toDF("doc_id", "source", "text"))
     try {
       val rows = docsSorted.select("doc_id", "source", "text").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq

@@ -83,8 +83,7 @@ class StreamingMixtureSpec extends SparkSpec {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, String)]
     val st = StreamingMixture.state(spark)
-    val q = StreamingMixture.attach(
-      input.toDS().toDF("doc_id", "source", "text"), st)
+    val q = st.attach(input.toDS().toDF("doc_id", "source", "text"))
     try {
       val rows = docsSorted.select("doc_id", "source", "text").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2)))

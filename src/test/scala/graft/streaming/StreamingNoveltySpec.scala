@@ -157,7 +157,7 @@ class StreamingNoveltySpec extends SparkSpec {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     val st = StreamingNovelty.state(spark)
-    val q = StreamingNovelty.attach(input.toDS().toDF("doc_id", "text"), st)
+    val q = st.attach(input.toDS().toDF("doc_id", "text"))
     try {
       val rows = docsSorted.select("doc_id", "text").collect()
         .map(r => (r.getLong(0), r.getString(1))).sortBy(-_._1).toSeq

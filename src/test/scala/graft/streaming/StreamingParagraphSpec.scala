@@ -119,16 +119,17 @@ class StreamingParagraphSpec extends SparkSpec {
     val before = rowsOf(st.snapshot())
     st.ingest(b1.toDF("doc_id", "text")) // idempotent skip
     assert(rowsOf(st.snapshot()) == before)
-    intercept[IllegalStateException] {
-      st.ingest(Seq((50L, "CHANGED")).toDF("doc_id", "text"))
-    }
-    intercept[IllegalStateException] {
-      st.ingest(Seq((60L, "v1 v2 v3"), (77L, "fresh"))
-        .toDF("doc_id", "text"))
-    }
-    intercept[IllegalStateException] {
-      st.ingest(Seq((88L, "k1"), (88L, "k1")).toDF("doc_id", "text"))
-    }
+    def refusal(rows: (Long, String)*): String =
+      intercept[IllegalStateException](st.ingest(rows.toDF("doc_id", "text")))
+        .getMessage
+    val drift = refusal((50L, "CHANGED"))
+    assert(drift.contains("fingerprints differ") &&
+      drift.contains("doc_id reuse"), drift)
+    val partial = refusal((60L, "v1 v2 v3"), (77L, "fresh"))
+    assert(partial.contains("partial overlap") &&
+      partial.contains("doc_id reuse"), partial)
+    val dup = refusal((88L, "k1"), (88L, "k1"))
+    assert(dup.contains("duplicate doc_id") && dup.contains("unique"), dup)
     assert(rowsOf(st.snapshot()) == before, "refusals must not mutate state")
   }
 
@@ -157,8 +158,7 @@ class StreamingParagraphSpec extends SparkSpec {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     val st = StreamingParagraph.state(spark)
-    val q = StreamingParagraph.attach(
-      input.toDS().toDF("doc_id", "text"), st)
+    val q = st.attach(input.toDS().toDF("doc_id", "text"))
     try {
       val rows = docsSorted.select("doc_id", "text").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSeq

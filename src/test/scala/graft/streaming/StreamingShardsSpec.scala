@@ -192,8 +192,7 @@ class StreamingShardsSpec extends SparkSpec {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, String)]
     val st = StreamingShards.state(spark)
-    val q = StreamingShards.attach(
-      input.toDS().toDF("doc_id", "source", "text"), st)
+    val q = st.attach(input.toDS().toDF("doc_id", "source", "text"))
     try {
       val ids = docsSorted.select("doc_id").collect()
         .map(_.getLong(0)).sorted.take(60)
